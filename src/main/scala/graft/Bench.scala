@@ -75,8 +75,9 @@ object Bench {
       // this memory pressure + GC)
       spark.sparkContext.getPersistentRDDs.values
         .foreach(_.unpersist(blocking = false))
-      // a failed query must not silently shrink the total: report -1
-      (name, if (ok) dt else -1.0, stealQ, gcQ)
+      // a failed query must not silently shrink the totals: report -1
+      // wall and -1 GC
+      (name, if (ok) dt else -1.0, stealQ, if (ok) gcQ else -1L)
     }
     def dict(entries: Seq[(String, Double)]): String = entries
       .map { case (k, v) => s"\"" + k + "\":" + v }.mkString("{", ",", "}")
@@ -84,11 +85,8 @@ object Bench {
     val totalSteal = results.map(_._3).filter(_ >= 0).sum
     val stealJson = results.map { case (k, _, s, _) => s"\"$k\":$s" }
       .mkString("{", ",", "}")
-    // match the wall-clock total's query set: failed queries report -1
-    // wall and are excluded there, so exclude their GC brackets too —
-    // otherwise the two totals cover different sets and GC attribution
-    // looks inflated relative to value
-    val totalGc = results.filter(_._2 >= 0).map(_._4).sum
+    // failed queries carry -1 GC, as they carry -1 wall
+    val totalGc = results.map(_._4).filter(_ >= 0).sum
     val gcJson = results.map { case (k, _, _, g) => s"\"$k\":$g" }
       .mkString("{", ",", "}")
     val timed = results.map { case (k, v, _, _) => k -> v }

@@ -1047,9 +1047,13 @@ object SparkEntry {
 
   // ---- persisted-index queries (reference E2 → Q1/Q2/Q3 on the index) ---
 
-  /** One prebuilt index per fixture dir per JVM (the index IS the point:
-    * build once, query many — queries must not pay the build). */
-  private val indexCache = new java.util.concurrent.ConcurrentHashMap[String, String]()
+  /** One-time builds (indexes, model fits, cluster state), one per key
+    * per JVM — build once, query many. A lazy cell per key runs the
+    * build outside the map's lock, so it may call [[once]] itself. */
+  private final class Once(build: () => AnyRef) { lazy val value = build() }
+  private val prepared = new java.util.concurrent.ConcurrentHashMap[String, Once]()
+  private def once[T <: AnyRef](key: String)(build: => T): T =
+    prepared.computeIfAbsent(key, _ => new Once(() => build)).value.asInstanceOf[T]
 
   /** Build any one-time infrastructure (search index, fitted IDF model)
     * ahead of query timing — the bench warm-up calls this so indexed /
@@ -1066,11 +1070,8 @@ object SparkEntry {
     * like a search index: in production it exists before any batch
     * arrives, so the bench warms it here and q172 measures the
     * incremental maintenance cost, not the one-time corpus build. */
-  private val clusterStateCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, String)]()
-  private def clusterStateFor(s: SparkSession,
-      dir: String): (String, String) =
-    clusterStateCache.computeIfAbsent(dir, d => {
+  private def clusterStateFor(s: SparkSession, d: String): (String, String) =
+    once("cluster_state|" + d) {
       val docs = Tables.documents(s, d)
       val old  = docs.filter(col("doc_id") % 5 =!= 0)
       val lbl = java.nio.file.Files
@@ -1083,50 +1084,46 @@ object SparkEntry {
       Dedup.minhashBandIndex(old, "doc_id", "text")
         .write.mode("overwrite").parquet(idx)
       (lbl, idx)
-    })
+    }
 
-  private def indexFor(s: SparkSession, dir: String): String =
-    indexCache.computeIfAbsent(dir, d => {
+  private def indexFor(s: SparkSession, d: String): String =
+    once("index|" + d) {
       val out = java.nio.file.Files.createTempDirectory("graft_index_").toString
       graft.index.SearchIndex.build(Tables.documents(s, d),
         Tables.embeddings(s, d), out)
       out
-    })
+    }
 
-  private val ivfCache = new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private def ivfFor(s: SparkSession, dir: String): String =
-    ivfCache.computeIfAbsent(dir, d => {
+  private def ivfFor(s: SparkSession, d: String): String =
+    once("ivf|" + d) {
       val out = java.nio.file.Files.createTempDirectory("graft_ivf_").toString
       graft.index.IvfIndex.build(Tables.embeddings(s, d), out, nCells = 8)
       out
-    })
+    }
 
-  private val pqCache = new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private def pqFor(s: SparkSession, dir: String): String =
-    pqCache.computeIfAbsent(dir, d => {
+  private def pqFor(s: SparkSession, d: String): String =
+    once("pq|" + d) {
       val out = java.nio.file.Files.createTempDirectory("graft_pq_").toString
       graft.index.PqIndex.build(Tables.embeddings(s, d), out,
         m = 8, nCodes = 16)
       out
-    })
+    }
 
-  private val ivfpqCache = new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private def ivfpqFor(s: SparkSession, dir: String): String =
-    ivfpqCache.computeIfAbsent(dir, d => {
+  private def ivfpqFor(s: SparkSession, d: String): String =
+    once("ivfpq|" + d) {
       val out = java.nio.file.Files.createTempDirectory("graft_ivfpq_").toString
       graft.index.IvfPqIndex.build(Tables.embeddings(s, d), out,
         nCells = 8, m = 8, nCodes = 16)
       out
-    })
+    }
 
   /** Index that had a doc-level retraction applied (q92): built over the
     * full corpus, then `doc_id % 37 == 0` deleted through
     * [[graft.index.SearchIndex.delete]] — queries must behave as if
     * those docs were never indexed (the oracle scores a corpus that
     * excludes them). */
-  private val delIndexCache = new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private def deletedIndexFor(s: SparkSession, dir: String): String =
-    delIndexCache.computeIfAbsent(dir, d => {
+  private def deletedIndexFor(s: SparkSession, d: String): String =
+    once("index_del|" + d) {
       val out = java.nio.file.Files.createTempDirectory("graft_index_del_").toString
       // index files are immutable once written: a file-level copy of the
       // shared index is the cheap way to a second instance (no second
@@ -1149,7 +1146,7 @@ object SparkEntry {
           .filter(col("doc_id") % 37 === 0)
           .select("doc_id"))
       out
-    })
+    }
 
   private val indexedRegistry: Seq[Q] = Seq(
     Q("q46_ivf_knn",
@@ -3914,24 +3911,22 @@ object SparkEntry {
   /** Bucketed catalog tables, one pair per (session, sf dir) — built in
     * [[prepare]] warm-up like the search index: the layout shuffle is
     * infrastructure, not query cost. */
-  private val bucketCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, String)]()
   private def bucketedFor(s: SparkSession, dir: String): (String, String) =
-    bucketCache.computeIfAbsent(
-      org.apache.spark.sql.graftext.SessionUtils.uuid(s) + "|" + dir, _ => {
-        val tag = java.lang.Long.toHexString(
-          java.lang.Integer.toUnsignedLong(dir.hashCode))
-        val li = s"graft_li_bkt_$tag"
-        val o  = s"graft_o_bkt_$tag"
-        graft.table.DataLayout.bucketWrite(
-          Tables.lineitem(s, dir)
-            .select("l_orderkey", "l_extendedprice", "l_discount"),
-          li, Seq("l_orderkey"), nBuckets = 8)
-        graft.table.DataLayout.bucketWrite(
-          Tables.orders(s, dir).select("o_orderkey", "o_orderpriority"),
-          o, Seq("o_orderkey"), nBuckets = 8)
-        (li, o)
-      })
+    once("bucket|" + org.apache.spark.sql.graftext.SessionUtils.uuid(s) +
+        "|" + dir) {
+      val tag = java.lang.Long.toHexString(
+        java.lang.Integer.toUnsignedLong(dir.hashCode))
+      val li = s"graft_li_bkt_$tag"
+      val o  = s"graft_o_bkt_$tag"
+      graft.table.DataLayout.bucketWrite(
+        Tables.lineitem(s, dir)
+          .select("l_orderkey", "l_extendedprice", "l_discount"),
+        li, Seq("l_orderkey"), nBuckets = 8)
+      graft.table.DataLayout.bucketWrite(
+        Tables.orders(s, dir).select("o_orderkey", "o_orderpriority"),
+        o, Seq("o_orderkey"), nBuckets = 8)
+      (li, o)
+    }
 
   /** Fact-to-fact revenue over the BUCKETED tables: both sides were
     * hash-bucketed on the order key at layout time, so the join itself
@@ -4155,18 +4150,18 @@ object SparkEntry {
   /** One MLlib IDF fit per (session, sf dir) — the fitted state is a
     * dim-length idf array, the per-query refit would be a full corpus
     * pass. */
-  private val mlFitCache =
-    new java.util.concurrent.ConcurrentHashMap[String, graft.embed.MlEmbedder.Fitted]()
   private def mlFitted(s: SparkSession, dir: String): graft.embed.MlEmbedder.Fitted =
-    mlFitCache.computeIfAbsent(
-      org.apache.spark.sql.graftext.SessionUtils.uuid(s) + "|" + dir,
-      _ => graft.embed.MlEmbedder.fit(Tables.documents(s, dir), "text", 64))
+    once("mlfit|" + org.apache.spark.sql.graftext.SessionUtils.uuid(s) +
+        "|" + dir) {
+      graft.embed.MlEmbedder.fit(Tables.documents(s, dir), "text", 64)
+    }
 
   private def mlFittedMd5(s: SparkSession, dir: String): graft.embed.MlEmbedder.Fitted =
-    mlFitCache.computeIfAbsent(
-      "md5|" + org.apache.spark.sql.graftext.SessionUtils.uuid(s) + "|" + dir,
-      _ => graft.embed.MlEmbedder.fit(Tables.documents(s, dir), "text", 64,
-        hash = "md5"))
+    once("mlfit_md5|" + org.apache.spark.sql.graftext.SessionUtils.uuid(s) +
+        "|" + dir) {
+      graft.embed.MlEmbedder.fit(Tables.documents(s, dir), "text", 64,
+        hash = "md5")
+    }
   /** CMS probe set: four in-vocabulary tokens plus one absent ("zebra")
     * to show the estimate-0-or-collision behavior. */
   private lazy val CmsProbes = Seq("customer", "merge", "spark", "vector", "zebra")

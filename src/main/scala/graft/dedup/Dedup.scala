@@ -1,6 +1,7 @@
 package graft.dedup
 
 import graft.operators.Ckpt.CkptOps
+import graft.operators.Iterate
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -51,7 +52,7 @@ object Dedup {
     * [[graft.operators.PageRank.BroadcastStateUpTo]] (4M), which was
     * calibrated for ~100 MB of compact numeric rows — the pair collect
     * holds BOXED external ids (strings in every call site here) in java
-    * HashMaps, several times heavier per row. Measured (AbProbe ufheap,
+    * HashMaps, several times heavier per row. Measured (driver heap probe,
     * 14-char string ids, worst-case single component): 1M pairs peak at
     * 223 MB of driver heap (collected Row[] + parent map live
     * together); 4M would peak at 836 MB. Past the bound the distributed
@@ -483,31 +484,29 @@ object Dedup {
     * each doc's cluster id is the minimum doc id reachable through the
     * pair graph, singletons label themselves. This is the
     * canonicalization step after candidates+verify: keep `cluster_id`,
-    * drop the rest. `pairs` must reference `allDocs` ids (every caller
-    * in this repo derives pairs from the same docs relation).
+    * drop the rest. Every caller in this repo derives `pairs` from the
+    * same docs relation. A pair endpoint absent from `allDocs` is not
+    * dropped: both paths keep it as a graph vertex, so the output holds
+    * exactly the `allDocs` ids, two docs linked only through an absent
+    * id share a cluster, and that cluster's `cluster_id` can be the
+    * absent id (FallbackParitySpec pins this).
     *
     * Shape: only vertices TOUCHED BY A PAIR can ever leave their own
     * label, so the closure runs over the pair-vertex set — never the
     * corpus — and the corpus-sized result is one left-join at the end
-    * (`coalesce(label, id)` labels singletons; broadcast on the fast
-    * path where labels are bounded, planner-chosen on the fallback
-    * where they are not). The corpus id projection is checkpointed so
-    * consumers that re-join the result against the same lineage don't
-    * duplicate the upstream scans (q131/q134 plan pin). While the pair
+    * (`coalesce(label, id)` labels singletons). While the pair
     * relation fits the driver-state bound (`stateUpTo` rows — the
-    * PageRank/IterState discipline, with a lower dedup-specific default
-    * [[NearDupStateUpTo]]), components come from one collected
+    * [[graft.operators.Iterate]] discipline, with a lower dedup-specific
+    * default [[NearDupStateUpTo]]), components come from one collected
     * union-find pass (exact, fully converged — the same answer the
     * oracle's recursive CTE computes). Past the bound, the pregel loop
-    * takes over: per round one equi-join of
-    * (edges × labels) + a min-aggregate against the dst-partitioned
-    * persist()ed edge copy (the HITS shape — a checkpointed relation
-    * surfaces as UnknownPartitioning under AQE and would re-shuffle
-    * the pair corpus every round; the DISTINCT rides inside the copy's
-    * shuffle). Iterations ≤ pair-graph diameter, `maxIter` guards
-    * pathological chains; convergence is a changed-count action per
-    * round — exactly what a pregel step costs at 100 TB. Parity of the
-    * two paths is pinned in FallbackParitySpec. */
+    * takes over: per round one equi-join of (edges × labels) + a
+    * min-aggregate against the dst-partitioned cached edge copy
+    * ([[graft.operators.Iterate.cached]]; the DISTINCT rides inside the
+    * copy's shuffle). Iterations ≤ pair-graph diameter, `maxIter`
+    * guards pathological chains; convergence is a changed-count action
+    * per round — exactly what a pregel step costs at 100 TB. Parity of
+    * the two paths is pinned in FallbackParitySpec. */
   def nearDupClusters(allDocs: DataFrame, idCol: String,
       pairs: DataFrame, maxIter: Int = 20,
       stateUpTo: Long = NearDupStateUpTo)
@@ -563,37 +562,37 @@ object Dedup {
           org.apache.spark.sql.types.StructField("id", idType),
           org.apache.spark.sql.types.StructField("label", idType))))
     } else {
-      // distributed pregel fallback, restricted to the pair-vertex set
-      val edges = p0.select(col("a").as("src"), col("b").as("dst"))
-        .unionByName(p0.select(col("b").as("src"), col("a").as("dst")))
-        .repartition(col("dst")).dropDuplicates("src", "dst").persist()
-      // symmetrized ⇒ the dst set IS the vertex set
-      var lab = edges.select(col("dst").as("id")).distinct()
-        .select(col("id"), col("id").as("label"))
-        .graftCheckpoint(true)
-      var changed = 1L
-      var i = 0
-      while (changed > 0 && i < maxIter) {
-        val neighborMin = edges
-          .join(lab.withColumnRenamed("id", "dst")
-            .withColumnRenamed("label", "n_label"), "dst")
-          .groupBy(col("src").as("id"))
-          .agg(min(col("n_label")).as("n_min"))
-        val next = lab.join(neighborMin, Seq("id"), "left")
-          .select(col("id"),
-            least(col("label"), coalesce(col("n_min"), col("label")))
-              .as("label"),
-            (col("n_min") < col("label")).as("chg"))
-        val step = next.graftCheckpoint(true)
-        changed = step.filter(col("chg")).count()
-        lab = step.select("id", "label")
-        i += 1
+      // distributed pregel fallback, restricted to the pair-vertex set;
+      // lab is eagerly checkpointed every round, so the result never
+      // reads the released edge copy
+      Iterate.cached(
+          p0.select(col("a").as("src"), col("b").as("dst"))
+            .unionByName(p0.select(col("b").as("src"), col("a").as("dst")))
+            .repartition(col("dst")).dropDuplicates("src", "dst")) { edges =>
+        // symmetrized ⇒ the dst set IS the vertex set
+        var lab = edges.select(col("dst").as("id")).distinct()
+          .select(col("id"), col("id").as("label"))
+          .graftCheckpoint(true)
+        var changed = 1L
+        var i = 0
+        while (changed > 0 && i < maxIter) {
+          val neighborMin = edges
+            .join(lab.withColumnRenamed("id", "dst")
+              .withColumnRenamed("label", "n_label"), "dst")
+            .groupBy(col("src").as("id"))
+            .agg(min(col("n_label")).as("n_min"))
+          val next = lab.join(neighborMin, Seq("id"), "left")
+            .select(col("id"),
+              least(col("label"), coalesce(col("n_min"), col("label")))
+                .as("label"),
+              (col("n_min") < col("label")).as("chg"))
+          val step = next.graftCheckpoint(true)
+          changed = step.filter(col("chg")).count()
+          lab = step.select("id", "label")
+          i += 1
+        }
+        lab
       }
-      // cache-leak guard: lab is eagerly checkpointed past the cache
-      // every round (and at init), so the copy can be released before
-      // the result frame escapes
-      edges.unpersist(blocking = false)
-      lab
     }
     // corpus pass: singletons (no pair) keep their own id as label. The
     // id projection is checkpointed (lineage truncated) so a consumer

@@ -3,8 +3,8 @@ package graft.embed
 import org.apache.spark.sql.SparkSession
 
 /** Scratch quality probe for [[CorpusEncoderTrain]] (not part of the
-  * driver contract — the GraphProbe discipline): trains the corpus
-  * encoder at configurable steps/margin/negatives/positional-encoding
+  * driver contract): trains the corpus encoder at configurable
+  * steps/margin/negatives/positional-encoding
   * settings and reports held-out span-retrieval recall@10 against the
   * word-TF-IDF baseline, using the trainer's own double-precision
   * forward (no ONNX round-trip), so objective/architecture experiments

@@ -141,11 +141,6 @@ object Graph {
   def labelPropagationAssignments(edges: DataFrame, rounds: Int,
       stateUpTo: Long = PageRank.BroadcastStateUpTo): DataFrame = {
     require(rounds >= 1)
-    // static per-round relation: neighbour pairs hash-partitioned ONCE
-    // on the join key (n) — rounds re-shuffle only the nodes-sized
-    // label relation (or broadcast it when metadata-sized), never the
-    // edge corpus. Lazy checkpoints keep lineage O(1) per round while
-    // fusing materialization into the terminal action.
     // checkpoint canon BEFORE the symmetrizing union: without it the
     // canonicalization (and the caller's whole edge build under it)
     // executes once per union branch when nbrs0 materializes
@@ -153,50 +148,34 @@ object Graph {
     val nbrs0 = e.select(col("a").as("v"), col("b").as("n"))
       .unionAll(e.select(col("b").as("v"), col("a").as("n")))
       .graftCheckpoint(false) // reused every round
-    var labels = nbrs0.select(col("v")).distinct()
+    val labels = nbrs0.select(col("v")).distinct()
       .select(col("v"), col("v").as("label"))
       .graftCheckpoint(false)
     val bc = labels.count() <= stateUpTo
-    // cached PARTITIONED copy: by the GROUP key (v) under the
-    // broadcast bound (the join is map-side there, and v-partitioning
-    // makes BOTH per-round groupBys plan exchange-free — v satisfies
-    // the (v,label) clustering); by the JOIN key (n) on the
-    // co-partitioned path. persist(), not checkpoint: a checkpoint's
-    // LogicalRDD surfaces as UnknownPartitioning under AQE and the
-    // planner re-shuffles every round (measured on hits, round 12).
-    val nbrs =
-      nbrs0.repartition(col(if (bc) "v" else "n")).persist()
-    def step(labels0: DataFrame): DataFrame = {
-      val l = labels0.withColumnRenamed("v", "n")
-      nbrs
-        .join(if (bc) broadcast(l) else l, "n") // neighbour labels
-        .groupBy("v", "label").agg(count(lit(1)).as("cnt"))
-        .groupBy("v")
-        // argmax by (cnt desc, label asc) as a min over a struct — a
-        // k=1-bounded aggregate, partial-agg friendly, integer-exact
-        .agg(min(struct((-col("cnt")).as("nc"), col("label").as("l"))).as("m"))
-        .select(col("v"), col("m.l").as("label"))
+    // neighbour pairs partitioned ONCE — rounds move only the label
+    // relation. Keyed by the GROUP key (v) under the broadcast bound
+    // (v-partitioning makes BOTH per-round groupBys plan exchange-free
+    // — v satisfies the (v,label) clustering), by the JOIN key (n) on
+    // the co-partitioned path
+    Iterate.cached(nbrs0.repartition(col(if (bc) "v" else "n"))) { nbrs =>
+      def step(labels0: DataFrame): DataFrame = {
+        val l = labels0.withColumnRenamed("v", "n")
+        nbrs
+          .join(if (bc) broadcast(l) else l, "n") // neighbour labels
+          .groupBy("v", "label").agg(count(lit(1)).as("cnt"))
+          .groupBy("v")
+          // argmax by (cnt desc, label asc) as a min over a struct — a
+          // k=1-bounded aggregate, partial-agg friendly, integer-exact
+          .agg(min(struct((-col("cnt")).as("nc"), col("label").as("l")))
+            .as("m"))
+          .select(col("v"), col("m.l").as("label"))
+      }
+      // stepsPerJob=1: composing 2 LPA rounds per job A/B-measured WORSE
+      // (round 10: k=1 best-of 4.28 s vs k=2 4.99 s isolated, steal ≤ 2)
+      // — the doubled join+double-groupBy plan costs the optimizer more
+      // than the saved job latency, unlike the lighter PageRank rounds
+      Iterate.rounds(labels, rounds, driverState = bc, stepsPerJob = 1)(step)
     }
-    // node-sized state: driver-carried literal rounds under the same
-    // bound the broadcast build collects at anyway (1 job per round).
-    // stepsPerJob=1: composing 2 LPA rounds per job A/B-measured WORSE
-    // (round 10: k=1 best-of 4.28 s vs k=2 4.99 s isolated, steal ≤ 2)
-    // — the doubled join+double-groupBy plan costs the optimizer more
-    // than the saved job latency, unlike the lighter PageRank rounds
-    val out =
-      if (bc) IterState.iterate(labels, rounds, stepsPerJob = 1)(step)
-      else (1 to rounds).foldLeft(labels) { case (l, _) =>
-        step(l).graftCheckpoint(false)
-      // eager: materialize the nodes-sized assignment past nbrs before
-      // releasing the cache (an unpersisted InMemoryRelation recomputes
-      // its child per consumer)
-      }.graftCheckpoint(true)
-    // cache-leak guard: persisted plans are CacheManager-pinned for the
-    // session lifetime — release the corpus-sized copy once iterated.
-    // Safe: the bc path's IterState result is a driver literal, the
-    // distributed path is eagerly checkpointed above.
-    nbrs.unpersist(blocking = false)
-    out
   }
 
   /** Newman–Girvan modularity of a community assignment:
@@ -315,31 +294,28 @@ object Graph {
       }
     }
     if (spilled) {
-      // cached v-partitioned adjacency copy for the distributed rounds
-      // (the HITS shape — a checkpointed nbrs is UnknownPartitioning
-      // under AQE and would re-shuffle the corpus every round); the
+      // v-partitioned adjacency copy for the distributed rounds; the
       // frontier is the only per-round exchange
-      val nbrsByV = nbrs.repartition(col("v")).persist()
-      var visitedDf = spark.createDataFrame(
-        java.util.Arrays.asList(visited.iterator
-          .map { case (v, dd) => Row(v, dd) }.toSeq: _*),
-        StructType(vSchema.fields :+
-          StructField("dist", IntegerType, nullable = false)))
-        .graftCheckpoint(true)
-      var frontierDf = litFrame(frontier)
-      for (dd <- d to maxHops) {
-        val next = frontierDf.join(nbrsByV, "v")
-          .select(col("n").as("v")).distinct()
-          .join(visitedDf, Seq("v"), "left_anti")
+      val visitedDf = Iterate.cached(nbrs.repartition(col("v"))) { nbrsByV =>
+        var visitedDf = spark.createDataFrame(
+          java.util.Arrays.asList(visited.iterator
+            .map { case (v, dd) => Row(v, dd) }.toSeq: _*),
+          StructType(vSchema.fields :+
+            StructField("dist", IntegerType, nullable = false)))
           .graftCheckpoint(true)
-        visitedDf = visitedDf
-          .unionAll(next.withColumn("dist", lit(dd)))
-          .graftCheckpoint(true)
-        frontierDf = next
+        var frontierDf = litFrame(frontier)
+        for (dd <- d to maxHops) {
+          val next = frontierDf.join(nbrsByV, "v")
+            .select(col("n").as("v")).distinct()
+            .join(visitedDf, Seq("v"), "left_anti")
+            .graftCheckpoint(true)
+          visitedDf = visitedDf
+            .unionAll(next.withColumn("dist", lit(dd)))
+            .graftCheckpoint(true)
+          frontierDf = next
+        }
+        visitedDf
       }
-      // visitedDf is eagerly checkpointed past the cache each round —
-      // safe to release the corpus copy before the final aggregate
-      nbrsByV.unpersist(blocking = false)
       visitedDf.groupBy("dist").agg(count(lit(1)).as("n_vertices"))
         .orderBy("dist")
     } else {
@@ -417,25 +393,22 @@ object Graph {
         r += 1
       }
     }
-    var distDf = distLit().graftCheckpoint(true)
-    if (spilled) {
-      // cached u-partitioned arc copy for the distributed rounds (the
-      // HITS shape — a checkpointed arcs relation is
-      // UnknownPartitioning under AQE and would re-shuffle the corpus
-      // every relaxation); the tropical state is the per-round exchange
-      val arcsByU = arcs.repartition(col("u")).persist()
-      for (_ <- r to rounds) {
-        val relaxed = distDf.withColumnRenamed("v", "u")
-          .withColumnRenamed("cost", "du")
-          .join(arcsByU, "u")
-          .select(col("v"), (col("du") + col("cost")).as("cost"))
-        distDf = distDf.unionAll(relaxed)
-          .groupBy("v").agg(min(col("cost")).as("cost"))
-          .graftCheckpoint(true)
+    val dist0 = distLit().graftCheckpoint(true)
+    val distDf =
+      if (!spilled) dist0
+      // u-partitioned arc copy for the distributed rounds; the tropical
+      // state is the per-round exchange
+      else Iterate.cached(arcs.repartition(col("u"))) { arcsByU =>
+        (r to rounds).foldLeft(dist0) { (d, _) =>
+          val relaxed = d.withColumnRenamed("v", "u")
+            .withColumnRenamed("cost", "du")
+            .join(arcsByU, "u")
+            .select(col("v"), (col("du") + col("cost")).as("cost"))
+          d.unionAll(relaxed)
+            .groupBy("v").agg(min(col("cost")).as("cost"))
+            .graftCheckpoint(true)
+        }
       }
-      // distDf is eagerly checkpointed past the cache each round
-      arcsByU.unpersist(blocking = false)
-    }
     distDf.orderBy(col("cost").asc, col("v").asc).limit(topK)
   }
 
@@ -665,73 +638,63 @@ object Graph {
   private def pathCentralityDist(nbrs: DataFrame, pivots: DataFrame,
       maxHops: Int, topK: Int): DataFrame = {
     val dec = "decimal(38,0)"
-    // Cached PARTITIONED adjacency copies, one per sweep's join key
-    // (the HITS shape): a checkpointed nbrs surfaces as
-    // UnknownPartitioning under AQE, so every forward/backward round
-    // would re-shuffle the adjacency CORPUS — the round-12 hazard.
-    // persist() keeps the cached plan's partitioning (PlanSpec
-    // "iterative corpus joins" pin); the state relation is then the
-    // only per-round exchange, which is the irreducible pregel cost.
-    val nbrsByV = nbrs.repartition(col("v")).persist()
-    val nbrsByN = nbrs.select(col("v").as("p"), col("n").as("w"))
-      .repartition(col("w")).persist()
-    val lvl0 = pivots.select(col("v")).distinct()
-      .select(col("v").as("s"), col("v"), lit(1).cast(dec).as("sigma"))
-      .graftCheckpoint(false)
-    // forward: levels(d) = (s, v, sigma). No running visited set: in
-    // an undirected BFS (per pivot s) a neighbour of a level-d vertex
-    // sits at distance d−1, d, or d+1, so excluding just the LAST TWO
-    // levels leaves exactly level d+1 — the anti-join input stays two
-    // frontier-sized frames instead of an O(reachable) union chain
-    // (one fewer checkpoint per round).
-    val levels = scala.collection.mutable.ArrayBuffer(lvl0)
-    for (d <- 1 to maxHops) {
-      val seen =
-        if (d == 1) lvl0.select("s", "v")
-        else levels(d - 1).select("s", "v")
-          .unionAll(levels(d - 2).select("s", "v"))
-      val next = levels.last.join(nbrsByV, "v")
-        .groupBy(col("s"), col("n"))
-        .agg(sum(col("sigma")).cast(dec).as("sigma"))
-        .withColumnRenamed("n", "v")
-        .join(seen, Seq("s", "v"), "left_anti")
+    // partitioned adjacency copies, one per sweep's join key: the
+    // state relation is then the only per-round exchange, which is the
+    // irreducible pregel cost (PlanSpec "iterative corpus joins" pin)
+    Iterate.cached(nbrs.repartition(col("v")),
+        nbrs.select(col("v").as("p"), col("n").as("w"))
+          .repartition(col("w"))) { (nbrsByV, nbrsByN) =>
+      val lvl0 = pivots.select(col("v")).distinct()
+        .select(col("v").as("s"), col("v"), lit(1).cast(dec).as("sigma"))
         .graftCheckpoint(false)
-      levels += next
-    }
-    // backward: g(maxHops) = 1; g(d) = 1 + Σ g(d+1) over DAG edges.
-    // An edge between a dist-d and a dist-(d+1) vertex IS a DAG edge
-    // (BFS level property), so joining level(d) preds against the
-    // level-(d+1) g-frame needs no explicit dist bookkeeping.
-    var g = levels(maxHops)
-      .select(col("s"), col("v"), col("sigma"), lit(1).cast(dec).as("g"))
-      .graftCheckpoint(false)
-    val contribs = scala.collection.mutable.ArrayBuffer(
-      g.select(col("v"), (col("sigma") * col("g")).cast(dec).as("t")))
-    for (d <- (maxHops - 1) to 1 by -1) {
-      val sums = g.select(col("s"), col("v").as("w"), col("g"))
-        .join(nbrsByN, "w")
-        .groupBy(col("s"), col("p"))
-        .agg(sum(col("g")).cast(dec).as("cg"))
-        .withColumnRenamed("p", "v")
-      g = levels(d).join(sums, Seq("s", "v"), "left_outer")
-        .select(col("s"), col("v"), col("sigma"),
-          (coalesce(col("cg"), lit(0).cast(dec)) + lit(1).cast(dec))
-            .cast(dec).as("g"))
+      // forward: levels(d) = (s, v, sigma). No running visited set: in
+      // an undirected BFS (per pivot s) a neighbour of a level-d vertex
+      // sits at distance d−1, d, or d+1, so excluding just the LAST TWO
+      // levels leaves exactly level d+1 — the anti-join input stays two
+      // frontier-sized frames instead of an O(reachable) union chain
+      // (one fewer checkpoint per round).
+      val levels = scala.collection.mutable.ArrayBuffer(lvl0)
+      for (d <- 1 to maxHops) {
+        val seen =
+          if (d == 1) lvl0.select("s", "v")
+          else levels(d - 1).select("s", "v")
+            .unionAll(levels(d - 2).select("s", "v"))
+        val next = levels.last.join(nbrsByV, "v")
+          .groupBy(col("s"), col("n"))
+          .agg(sum(col("sigma")).cast(dec).as("sigma"))
+          .withColumnRenamed("n", "v")
+          .join(seen, Seq("s", "v"), "left_anti")
+          .graftCheckpoint(false)
+        levels += next
+      }
+      // backward: g(maxHops) = 1; g(d) = 1 + Σ g(d+1) over DAG edges.
+      // An edge between a dist-d and a dist-(d+1) vertex IS a DAG edge
+      // (BFS level property), so joining level(d) preds against the
+      // level-(d+1) g-frame needs no explicit dist bookkeeping.
+      var g = levels(maxHops)
+        .select(col("s"), col("v"), col("sigma"), lit(1).cast(dec).as("g"))
         .graftCheckpoint(false)
-      contribs += g.select(col("v"),
-        (col("sigma") * col("g")).cast(dec).as("t"))
+      val contribs = scala.collection.mutable.ArrayBuffer(
+        g.select(col("v"), (col("sigma") * col("g")).cast(dec).as("t")))
+      for (d <- (maxHops - 1) to 1 by -1) {
+        val sums = g.select(col("s"), col("v").as("w"), col("g"))
+          .join(nbrsByN, "w")
+          .groupBy(col("s"), col("p"))
+          .agg(sum(col("g")).cast(dec).as("cg"))
+          .withColumnRenamed("p", "v")
+        g = levels(d).join(sums, Seq("s", "v"), "left_outer")
+          .select(col("s"), col("v"), col("sigma"),
+            (coalesce(col("cg"), lit(0).cast(dec)) + lit(1).cast(dec))
+              .cast(dec).as("g"))
+          .graftCheckpoint(false)
+        contribs += g.select(col("v"),
+          (col("sigma") * col("g")).cast(dec).as("t"))
+      }
+      contribs.reduce(_ unionAll _)
+        .groupBy("v")
+        .agg(sum(col("t")).cast(dec).cast("long").as("traffic"))
+        .orderBy(col("traffic").desc, col("v").asc)
+        .limit(topK)
     }
-    // eager: the topK-sized result materializes past the cached copies
-    // before they are released (cache-leak guard — persisted plans are
-    // CacheManager-pinned for the session lifetime otherwise)
-    val res = contribs.reduce(_ unionAll _)
-      .groupBy("v")
-      .agg(sum(col("t")).cast(dec).cast("long").as("traffic"))
-      .orderBy(col("traffic").desc, col("v").asc)
-      .limit(topK)
-      .graftCheckpoint(true)
-    nbrsByV.unpersist(blocking = false)
-    nbrsByN.unpersist(blocking = false)
-    res
   }
 }

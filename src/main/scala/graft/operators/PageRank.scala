@@ -1,8 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
+import org.apache.spark.sql.types.{DecimalType, DoubleType, StructField,
+  StructType}
 
 import Ckpt.CkptOps
 
@@ -11,31 +12,18 @@ import Ckpt.CkptOps
   * the edge corpus:
   *
   *  - The static relation (edges FUSED with out-degree — one setup
-  *    join, not one per iteration) is hash-partitioned ONCE and cached
-  *    with `persist()`, NOT checkpointed: a checkpoint's `LogicalRDD`
-  *    surfaces as UnknownPartitioning under AQE, so the planner
-  *    silently re-inserts an edge-scale Exchange into EVERY iteration
-  *    (measured round 12; the hazard and the fixed shape are both
-  *    pinned by PlanSpec "HITS round: the per-iteration aggregation is
-  *    exchange-free"). `persist()`'s InMemoryRelation keeps the cached
-  *    plan's partitioning, so every iteration reuses the copy with NO
-  *    edge shuffle — see the cache-build sites at run/runWeighted/
-  *    personalized. The copy is keyed by the GROUP BY column on the
+  *    join, not one per iteration) is partitioned ONCE and cached by
+  *    [[Iterate.cached]]: keyed by the GROUP BY column on the
   *    broadcast-state path (the join is map-side there) and by the
   *    JOIN key on the co-partitioned path. Per iteration only the
   *    nodes-sized rank relation moves: one shuffle in, one partial-
   *    agg'd contribution shuffle out.
   *  - When the node set is metadata-sized (`broadcastStateUpTo`,
   *    default 4M — a ~100 MB frame), the rank relation BROADCASTS
-  *    instead, making the join map-side: an iteration is then a single
-  *    partial-agg shuffle whose wire size is ~(partitions × nodes),
-  *    independent of edge count. At 1000-executor scale with billions
-  *    of nodes the knob disables itself and the co-partitioned path
-  *    carries.
-  *  - Checkpoints are LAZY: lineage still truncates to O(1) per
-  *    iteration (planning stays constant-cost), but materialization
-  *    fuses into the terminal action instead of paying one scheduled
-  *    job per iteration.
+  *    instead, making the join map-side, and [[Iterate.rounds]]
+  *    carries it on the driver. At 1000-executor scale with billions
+  *    of nodes the bound disables itself and the co-partitioned path
+  *    carries, lazily checkpointed per round.
   *
   * Cross-engine determinism: a node's incoming contribution sum is
   * order-dependent in doubles, so each contribution is rounded to
@@ -84,89 +72,17 @@ object PageRank {
     * mass never minted) rather than ranked — callers with uncertain
     * inputs should gate on [[requireOutEdgeClosed]] once at ingest.
     * Returns (node, rank) after `iters` damped iterations from the
-    * uniform start, rank rounded to `outDp` dp. */
+    * uniform start, rank rounded to `outDp` dp.
+    *
+    * [[runWeighted]] with every weight 1: bit-identical to a uniform
+    * split, since `rank * 1.0 == rank` in IEEE doubles and the weight
+    * sum IS the out-degree. */
   def run(edges: DataFrame, iters: Int, damping: Double,
       outDp: Int = 9,
       broadcastStateUpTo: Long = BroadcastStateUpTo,
-      inEdgeClosed: Boolean = false): DataFrame = {
-    require(iters >= 1, "iters >= 1")
-    // ONE lazy checkpoint on the (narrow, two-column) edge relation:
-    // callers hand symmetrized UNIONS of derived edge builds, and
-    // without truncation here the build re-executes once per union
-    // branch per consumer (deg count, then ew materialization) — a
-    // probe measured 4 edge-builds per run, ~70% of q230's wall clock.
-    val e0 = edges.select(col("src"), col("dst")).graftCheckpoint(false)
-    // Every node has an out-edge (the documented precondition — which
-    // the oracle's `DISTINCT src` node set assumes too), so the degree
-    // relation IS the node set: no separate src∪dst distinct pass.
-    val deg = e0.groupBy("src").agg(count(lit(1)).as("deg"))
-      .graftCheckpoint(false)
-    val n = deg.count() // metadata-scale action: one long
-    // an empty edge relation has no fixed point to iterate: return the
-    // empty (node, rank) frame — the SQL formulation's answer — rather
-    // than tripping ANSI division on the 1/n teleport term
-    if (n == 0)
-      return deg.select(col("src").as("node"),
-        lit(0.0).cast("double").as("rank"))
-    val bc = n <= broadcastStateUpTo
-    // static (src, dst, deg), cached PARTITIONED: by the GROUP key
-    // (dst) under the broadcast bound — the iteration join is map-side
-    // there, so dst-partitioning makes the per-iteration contribution
-    // aggregation plan with NO exchange (one upfront edge shuffle buys
-    // `iters` saved ones); by the JOIN key (src) on the co-partitioned
-    // path. persist(), not checkpoint: a checkpoint's LogicalRDD
-    // surfaces as UnknownPartitioning under AQE and the planner
-    // re-shuffles every iteration (measured on hits, round 12).
-    val ew = {
-      val j = e0.join(maybeBroadcast(deg, bc), "src")
-      j.repartition(col(if (bc) "dst" else "src")).persist()
-    }
-    val nodes = deg.select(col("src").as("node"))
-
-    val init = nodes.select(col("node"),
-      round(lit(1.0) / n, 12).cast(DecimalType(28, 12)).as("rank"))
-
-    // identical expression algebra on either path — results bit-equal
-    def step(r: DataFrame): DataFrame = {
-      val contrib = ew
-        .join(maybeBroadcast(r.withColumnRenamed("node", "src"), bc), "src")
-        .select(col("dst").as("node"),
-          round(col("rank").cast("double") / col("deg").cast("double"), 12)
-            .cast(DecimalType(28, 12)).as("c"))
-      val agg = contrib.groupBy("node").agg(sum("c").as("s"))
-      // `inEdgeClosed`: the caller guarantees every node also has an
-      // IN-edge (true by construction for the symmetrized unions every
-      // caller in this repo builds) — then the aggregate's key set IS
-      // the node set and the nodes-join is an identity: skip it
-      // (round-13 optimization: one join fewer per iteration plan —
-      // smaller codegen, fewer per-round operators; parity pinned in
-      // FallbackParitySpec). Without the guarantee keep the left join
-      // so an isolated src-only node degrades to the teleport term.
-      (if (inEdgeClosed) agg
-       else nodes.join(agg, Seq("node"), "left"))
-        .select(col("node"),
-          round(lit(1.0 - damping) / n +
-            lit(damping) * coalesce(col("s").cast("double"), lit(0.0)), 12)
-            .cast(DecimalType(28, 12)).as("rank"))
-    }
-    val ranks =
-      if (bc) IterState.iterate(init, iters)(step) // 1 job per iteration
-      else (1 to iters).foldLeft(init) { case (r, _) =>
-        step(r).graftCheckpoint(false) // O(1) lineage, fused
-      // eager: materialize the (nodes-sized) fixed point past ew
-      // before releasing the cache — unpersisted InMemoryRelations
-      // recompute their child per consumer on access
-      }.graftCheckpoint(true)
-    // Release the cached edge copy NOW: persisted plans are pinned in
-    // the session CacheManager (never ContextCleaner-collected), so
-    // without this every call leaks a corpus-sized cache for the
-    // session lifetime — and the bench/verify drivers run hundreds of
-    // operator calls per session. Safe: the bc path's IterState result
-    // is a driver literal, the distributed path is eagerly
-    // checkpointed above — neither re-reads ew.
-    ew.unpersist(blocking = false)
-    ranks.select(col("node"), round(col("rank").cast("double"), outDp).as("rank"))
-  }
+      inEdgeClosed: Boolean = false): DataFrame =
+    runWeighted(edges.select(col("src"), col("dst"), lit(1L).as("w")),
+      iters, damping, outDp, broadcastStateUpTo, inEdgeClosed)
 
   /** Weighted PageRank: [[run]] with edge-proportional mass split —
     * a node's rank flows to each out-neighbour in proportion to the
@@ -174,55 +90,66 @@ object PageRank {
     * contribution = rank · w / W(src) with W(src) = Σ out-weights.
     * The recsys-standard influence ranking when tie strength matters
     * (a 100×-co-purchased pair should carry 100× the vote of a
-    * one-off). Same out-edge-closed precondition, fixed-point
-    * 12-dp-decimal iteration discipline, broadcast-state bound and
-    * empty-graph behavior as [[run]]; weights must be positive (W > 0
-    * keeps the one division total). Input (src, dst, w); returns
-    * (node, rank). */
+    * one-off). Same out-edge-closed precondition as [[run]]; weights
+    * must be positive (W > 0 keeps the one division total). An empty
+    * edge relation returns the empty (node, rank) frame. Input
+    * (src, dst, w); returns (node, rank). */
   def runWeighted(edges: DataFrame, iters: Int, damping: Double,
       outDp: Int = 9,
       broadcastStateUpTo: Long = BroadcastStateUpTo,
       inEdgeClosed: Boolean = false): DataFrame = {
     require(iters >= 1, "iters >= 1")
+    // ONE lazy checkpoint on the (narrow) edge relation: callers hand
+    // symmetrized UNIONS of derived edge builds, and without truncation
+    // here the build re-executes once per union branch per consumer
+    // (weight sum, then the static copy) — a probe measured 4
+    // edge-builds per run, ~70% of q230's wall clock.
     val e0 = edges.select(col("src"), col("dst"), col("w"))
-      .graftCheckpoint(false) // one edge build — see [[run]]
+      .graftCheckpoint(false)
+    // Every node has an out-edge (the documented precondition — which
+    // the oracle's `DISTINCT src` node set assumes too), so the weight
+    // relation IS the node set: no separate src∪dst distinct pass.
     val wsum = e0.groupBy("src").agg(sum(col("w")).as("wsum"))
       .graftCheckpoint(false)
-    val n = wsum.count()
+    val n = wsum.count() // metadata-scale action: one long
+    // an empty edge relation has no fixed point to iterate: return the
+    // empty (node, rank) frame — the SQL formulation's answer — rather
+    // than tripping ANSI division on the 1/n teleport term
     if (n == 0)
       return wsum.select(col("src").as("node"),
         lit(0.0).cast("double").as("rank"))
     val bc = n <= broadcastStateUpTo
-    val ew = { // group-key/join-key partitioned cache — see [[run]]
-      val j = e0.join(maybeBroadcast(wsum, bc), "src")
-      j.repartition(col(if (bc) "dst" else "src")).persist()
-    }
     val nodes = wsum.select(col("src").as("node"))
     val init = nodes.select(col("node"),
       round(lit(1.0) / n, 12).cast(DecimalType(28, 12)).as("rank"))
-    def step(r: DataFrame): DataFrame = {
-      val contrib = ew
-        .join(maybeBroadcast(r.withColumnRenamed("node", "src"), bc), "src")
-        .select(col("dst").as("node"),
-          round(col("rank").cast("double") * col("w").cast("double")
-            / col("wsum").cast("double"), 12)
-            .cast(DecimalType(28, 12)).as("c"))
-      val agg = contrib.groupBy("node").agg(sum("c").as("s"))
-      // inEdgeClosed: aggregate key set == node set → skip the
-      // identity nodes-join (see [[run]])
-      (if (inEdgeClosed) agg
-       else nodes.join(agg, Seq("node"), "left"))
-        .select(col("node"),
-          round(lit(1.0 - damping) / n +
-            lit(damping) * coalesce(col("s").cast("double"), lit(0.0)), 12)
-            .cast(DecimalType(28, 12)).as("rank"))
+    val ranks = Iterate.cached(e0.join(maybeBroadcast(wsum, bc), "src")
+        .repartition(col(if (bc) "dst" else "src"))) { ew =>
+      // identical expression algebra on either path — results bit-equal
+      def step(r: DataFrame): DataFrame = {
+        val contrib = ew
+          .join(maybeBroadcast(r.withColumnRenamed("node", "src"), bc),
+            "src")
+          .select(col("dst").as("node"),
+            round(col("rank").cast("double") * col("w").cast("double")
+              / col("wsum").cast("double"), 12)
+              .cast(DecimalType(28, 12)).as("c"))
+        val agg = contrib.groupBy("node").agg(sum("c").as("s"))
+        // `inEdgeClosed`: the caller guarantees every node also has an
+        // IN-edge (true by construction for the symmetrized unions
+        // every caller in this repo builds) — then the aggregate's key
+        // set IS the node set and the nodes-join is an identity: skip
+        // it (one join fewer per iteration plan; parity pinned in
+        // FallbackParitySpec). Without the guarantee keep the left join
+        // so an isolated src-only node degrades to the teleport term.
+        (if (inEdgeClosed) agg
+         else nodes.join(agg, Seq("node"), "left"))
+          .select(col("node"),
+            round(lit(1.0 - damping) / n +
+              lit(damping) * coalesce(col("s").cast("double"), lit(0.0)),
+              12).cast(DecimalType(28, 12)).as("rank"))
+      }
+      Iterate.rounds(init, iters, driverState = bc)(step)
     }
-    val ranks =
-      if (bc) IterState.iterate(init, iters)(step)
-      else (1 to iters).foldLeft(init) { case (r, _) =>
-        step(r).graftCheckpoint(false)
-      }.graftCheckpoint(true) // eager past ew — see [[run]]
-    ew.unpersist(blocking = false) // cache-leak guard — see [[run]]
     ranks.select(col("node"),
       round(col("rank").cast("double"), outDp).as("rank"))
   }
@@ -241,11 +168,9 @@ object PageRank {
       damping: Double, outDp: Int = 9,
       broadcastStateUpTo: Long = BroadcastStateUpTo): DataFrame = {
     require(iters >= 1, "iters >= 1")
-    // one lazy edge checkpoint — see [[run]]
+    // one lazy edge checkpoint; degree relation = node set — see
+    // [[runWeighted]] for both arguments
     val e0 = edges.select(col("src"), col("dst")).graftCheckpoint(false)
-    // degree relation = node set under the out-edge precondition, and
-    // the edge repartition is skipped on the broadcast path — see
-    // [[run]] for both arguments
     val deg = e0.groupBy("src").agg(count(lit(1)).as("deg"))
       .graftCheckpoint(false)
     val nodes = deg.select(col("src").as("node"))
@@ -260,36 +185,30 @@ object PageRank {
     val nSeeds = if (counts.isNullAt(1)) 0L else counts.getLong(1)
     require(nSeeds >= 1, "at least one seed must be a graph node")
     val bc = n <= broadcastStateUpTo
-    val ew = { // group-key/join-key partitioned cache — see [[run]]
-      val j = e0.join(maybeBroadcast(deg, bc), "src")
-      j.repartition(col(if (bc) "dst" else "src")).persist()
-    }
     val teleport = round(col("seed").cast("double") * (1.0 - damping)
       / nSeeds, 12)
     val init = nodes.select(col("node"), col("seed"),
       round(col("seed").cast("double") / nSeeds, 12)
         .cast(DecimalType(28, 12)).as("rank"))
-    def step(r: DataFrame): DataFrame = {
-      val contrib = ew
-        .join(maybeBroadcast(
-          r.select(col("node").as("src"), col("rank")), bc), "src")
-        .select(col("dst").as("node"),
-          round(col("rank").cast("double") / col("deg").cast("double"), 12)
-            .cast(DecimalType(28, 12)).as("c"))
-      nodes
-        .join(contrib.groupBy("node").agg(sum("c").as("s")),
-          Seq("node"), "left")
-        .select(col("node"), col("seed"),
-          round(teleport +
-            lit(damping) * coalesce(col("s").cast("double"), lit(0.0)), 12)
-            .cast(DecimalType(28, 12)).as("rank"))
+    val ranks = Iterate.cached(e0.join(maybeBroadcast(deg, bc), "src")
+        .repartition(col(if (bc) "dst" else "src"))) { ew =>
+      def step(r: DataFrame): DataFrame = {
+        val contrib = ew
+          .join(maybeBroadcast(
+            r.select(col("node").as("src"), col("rank")), bc), "src")
+          .select(col("dst").as("node"),
+            round(col("rank").cast("double") / col("deg").cast("double"),
+              12).cast(DecimalType(28, 12)).as("c"))
+        nodes
+          .join(contrib.groupBy("node").agg(sum("c").as("s")),
+            Seq("node"), "left")
+          .select(col("node"), col("seed"),
+            round(teleport +
+              lit(damping) * coalesce(col("s").cast("double"), lit(0.0)),
+              12).cast(DecimalType(28, 12)).as("rank"))
+      }
+      Iterate.rounds(init, iters, driverState = bc)(step)
     }
-    val ranks =
-      if (bc) IterState.iterate(init, iters)(step) // 1 job per iteration
-      else (1 to iters).foldLeft(init) { case (r, _) =>
-        step(r).graftCheckpoint(false)
-      }.graftCheckpoint(true) // eager past ew — see [[run]]
-    ew.unpersist(blocking = false) // cache-leak guard — see [[run]]
     ranks.select(col("node"),
       round(col("rank").cast("double"), outDp).as("rank"))
   }
@@ -312,51 +231,32 @@ object PageRank {
     // raw (pre-distinct) edge projection, checkpointed once so the
     // caller's edge build runs once, not once per copy
     val e0 = edges.select(col("hub"), col("auth")).graftCheckpoint(false)
-    // Both paths keep TWO partitioned DEDUPED edge copies, keyed for
-    // different reasons: the broadcast path partitions each copy by
-    // its half-iteration's GROUP BY key (the join is map-side, so the
-    // per-round aggregation becomes shuffle-free — 2 one-time shuffles
-    // buy 2·iters saved ones); the distributed path keys by the JOIN
-    // column (state is corpus-sized there, the join is the shuffle
-    // that matters). The DISTINCT rides inside each copy's shuffle:
-    // hashpartitioning(hub) satisfies the (hub, auth) dedup
-    // clustering, so dropDuplicates is a local pass — no standalone
-    // distinct stage, no third materialization.
-    //
-    // persist(), NOT localCheckpoint: a checkpoint's LogicalRDD
-    // surfaces as UnknownPartitioning under AQE (measured: the
-    // downstream groupBy re-inserted `Exchange hashpartitioning` —
-    // the whole point of the copies, silently lost), while
-    // InMemoryRelation keeps the cached plan's partitioning and the
-    // per-round aggregation plans with NO exchange. Lineage stays
-    // shallow (one Exchange over e0's checkpoint) and recoverable.
-    val eByHub = e0.repartition(col("hub"))
-      .dropDuplicates("hub", "auth").persist()
-    val eByAuth = e0.repartition(col("auth"))
-      .dropDuplicates("hub", "auth").persist()
-    // hub relation off the hub-partitioned copy: distinct needs no
-    // further exchange
-    val hubs = eByHub.select(col("hub")).distinct().graftCheckpoint(false)
-    val nh = hubs.count()
-    // empty edge relation: no hubs to normalize over — return the
-    // empty (node, auth) frame like the SQL formulation would
-    if (nh == 0) {
-      // correctness-safe early release: persist keeps full lineage,
-      // and the empty frame recomputes for free
-      eByHub.unpersist(blocking = false)
-      eByAuth.unpersist(blocking = false)
-      return eByAuth.select(col("auth").as("node"),
-        lit(0.0).cast("double").as("auth"))
+    // Two DEDUPED edge copies, one per key: the broadcast path groups
+    // each half-iteration by its copy's key (2 one-time shuffles buy
+    // 2·iters saved ones); the distributed path joins on it. The
+    // DISTINCT rides inside each copy's shuffle: hashpartitioning(hub)
+    // satisfies the (hub, auth) dedup clustering, so dropDuplicates is
+    // a local pass — no standalone distinct stage.
+    Iterate.cached(
+        e0.repartition(col("hub")).dropDuplicates("hub", "auth"),
+        e0.repartition(col("auth")).dropDuplicates("hub", "auth")) {
+      (eByHub, eByAuth) =>
+        // hub relation off the hub-partitioned copy: distinct needs no
+        // further exchange
+        val hubs = eByHub.select(col("hub")).distinct()
+          .graftCheckpoint(false)
+        val nh = hubs.count()
+        // empty edge relation: no hubs to normalize over — return the
+        // empty (node, auth) frame like the SQL formulation would
+        if (nh == 0)
+          e0.sparkSession.createDataFrame(
+            java.util.Collections.emptyList[Row](),
+            StructType(Seq(StructField("node", e0.schema("auth").dataType),
+              StructField("auth", DoubleType, nullable = false))))
+        else if (nh <= broadcastStateUpTo)
+          hitsBroadcast(eByHub, eByAuth, hubs, nh, iters, outDp)
+        else hitsDistributed(eByHub, eByAuth, hubs, nh, iters, outDp)
     }
-    val bc = nh <= broadcastStateUpTo
-    val res = (if (bc) hitsBroadcast(eByHub, eByAuth, hubs, nh, iters, outDp)
-      else hitsDistributed(eByHub, eByAuth, hubs, nh, iters, outDp))
-      // eager: the (nodes-sized) result materializes past the cached
-      // copies before they are released — see [[run]]'s leak note
-      .graftCheckpoint(true)
-    eByHub.unpersist(blocking = false)
-    eByAuth.unpersist(blocking = false)
-    res
   }
 
   /** Broadcast-state HITS: state carried as SCALED LONGS (micro =
@@ -429,10 +329,9 @@ object PageRank {
     // round-trips the driver as external rows — each broadcast build
     // collects INTERNAL rows and materializes the previous round's
     // lazy checkpoint in the same pass (A/B at sf1: fold 9.95 s vs
-    // IterState k=2 10.56 s vs k=1 11.41 s, clean steal brackets).
-    val hFinal = (1 to iters - 1).foldLeft(h0) { case (h, _) =>
-      fullRound(h).graftCheckpoint(false)
-    }
+    // driver-carried state k=2 10.56 s vs k=1 11.41 s, clean steal
+    // brackets).
+    val hFinal = Iterate.fold(h0, iters - 1)(fullRound)
     authHalf(hFinal).select(col("auth").as("node"),
       round(microToDouble(col("as12")), outDp).as("auth"))
   }
@@ -466,9 +365,7 @@ object PageRank {
           round(col("hr").cast("double") / col("t").cast("double"), 12)
             .cast(DecimalType(28, 12)).as("hs"))
     }
-    val hFinal = (1 to iters - 1).foldLeft(h0) { case (h, _) =>
-      fullRound(h).graftCheckpoint(false)
-    }
+    val hFinal = Iterate.fold(h0, iters - 1)(fullRound)
     authHalf(hFinal).select(col("auth").as("node"),
       round(col("as").cast("double"), outDp).as("auth"))
   }

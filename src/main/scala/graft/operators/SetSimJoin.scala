@@ -80,7 +80,7 @@ object SetSimJoin {
     // only each set's rarest elements in the index, so a list is long
     // only for genuinely-shared rare shingles (the candidates we must
     // emit anyway; the join shape had the identical quadratic output).
-    // A/B (AbProbe ppjoin2, 4 alternating reps, steal ≤ 11): group
+    // A/B (4 alternating reps, steal ≤ 11): group
     // 1.79 s vs self-join 2.80 s best-of at sf0.1.
     val cands = prefix
       .groupBy("el")

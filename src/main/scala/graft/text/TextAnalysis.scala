@@ -1,6 +1,7 @@
 package graft.text
 
 import graft.operators.Ckpt.CkptOps
+import graft.operators.Iterate
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -554,39 +555,31 @@ object TextAnalysis {
       .unionAll(sh2.select(col("dst").as("src"), col("src").as("dst")))
       .groupBy("src", "dst").agg(count(lit(1)).cast("long").as("w"))
     val outw = edges.groupBy("src").agg(sum("w").as("ow"))
-    // ONE materialized copy of the per-round edge relation, partitioned
-    // by the per-round join key. Without it each unrolled iteration
-    // (and each per-round broadcast of the node count) re-embedded the
-    // whole edge lineage — 2 corpus scans per reference, 34 document
-    // scans / 324 operators in the q140 plan. persist(), not
-    // checkpoint: the InMemoryRelation keeps the src hash-partitioning
-    // so the per-round join side plans exchange-free (the LPA/HITS
-    // discipline).
-    val en = edges.join(outw, "src")
-      .select(col("src"), col("dst"),
-        (col("w").cast("double") / col("ow").cast("double")).as("wn"))
-      .repartition(col("src")).persist()
-    // en is inner-joined on src against outw (itself grouped from
-    // edges), so en's src set IS the node set
-    val nodes = en.select(col("src").as("token")).distinct()
-    // node count as a driver scalar (the PageRank n = deg.count()
-    // pattern) instead of a 1-row frame crossJoined+broadcast per round
-    val n = nodes.count().toDouble
-    var pr = nodes.select(col("token"), (lit(1.0) / lit(n)).as("pr"))
-    for (_ <- 1 to iters) {
-      pr = en.join(pr.withColumnRenamed("token", "src"), "src")
-        .groupBy("dst").agg(sum(col("wn") * col("pr")).as("s"))
-        .select(col("dst").as("token"),
-          round(lit(1.0 - damping) / lit(n) + lit(damping) * col("s"), 9)
-            .as("pr"))
+    // ONE cached copy of the per-round edge relation, partitioned by
+    // the per-round join key. Without it each unrolled iteration (and
+    // each per-round broadcast of the node count) re-embedded the whole
+    // edge lineage — 2 corpus scans per reference, 34 document scans /
+    // 324 operators in the q140 plan.
+    Iterate.cached(edges.join(outw, "src")
+        .select(col("src"), col("dst"),
+          (col("w").cast("double") / col("ow").cast("double")).as("wn"))
+        .repartition(col("src"))) { en =>
+      // en is inner-joined on src against outw (itself grouped from
+      // edges), so en's src set IS the node set
+      val nodes = en.select(col("src").as("token")).distinct()
+      // node count as a driver scalar (the PageRank n = deg.count()
+      // pattern) instead of a 1-row frame crossJoined+broadcast per round
+      val n = nodes.count().toDouble
+      var pr = nodes.select(col("token"), (lit(1.0) / lit(n)).as("pr"))
+      for (_ <- 1 to iters) {
+        pr = en.join(pr.withColumnRenamed("token", "src"), "src")
+          .groupBy("dst").agg(sum(col("wn") * col("pr")).as("s"))
+          .select(col("dst").as("token"),
+            round(lit(1.0 - damping) / lit(n) + lit(damping) * col("s"), 9)
+              .as("pr"))
+      }
+      pr.select(col("token"), round(col("pr"), 6).as("pr"))
     }
-    // eager checkpoint of the vocabulary-sized result, then release
-    // the cached copy (cache-leak guard: persisted plans are pinned
-    // for the session otherwise)
-    val out = pr.select(col("token"), round(col("pr"), 6).as("pr"))
-      .graftCheckpoint(true)
-    en.unpersist(blocking = false)
-    out
   }
 
   /** Full per-document stats relation: the one-pass profile a pipeline

@@ -3,7 +3,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.functions.TextFunctions
 
-/** Scratch stage-timing probe (GraphProbe discipline). */
+/** Scratch stage-timing probe (not part of the driver contract). */
 object PlanProbe {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/tmp/sf1")

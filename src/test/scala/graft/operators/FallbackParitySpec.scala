@@ -136,6 +136,17 @@ class FallbackParitySpec extends SparkSpec {
     val m = fast.filter(col("doc_id") === lit(supp))
       .collect()(0).getString(1)
     assert(m == bmp, s"fast path picked $m — UTF-16 order leaked in")
+    // pair endpoints absent from allDocs ("b0"): both paths keep them
+    // as graph vertices, so k and m (linked only through b0) share a
+    // cluster whose id is the absent b0, and the output holds exactly
+    // the allDocs ids
+    val docs2 = Seq("k", "m", "x").toDF("doc_id")
+    val pairs2 = Seq(("k", "b0"), ("b0", "m")).toDF("a", "b")
+    val fast2 = graft.dedup.Dedup.nearDupClusters(docs2, "doc_id", pairs2)
+    val dist2 = graft.dedup.Dedup.nearDupClusters(docs2, "doc_id", pairs2,
+      stateUpTo = 0L)
+    assert(rowsOf(fast2) == rowsOf(dist2))
+    assert(rowsOf(fast2) == Seq("[k,b0]", "[m,b0]", "[x,x]"))
   }
 
   test("bfsHopHistogram: driver frontier ≡ spilled distributed loop") {
