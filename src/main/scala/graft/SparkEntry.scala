@@ -1119,7 +1119,7 @@ object SparkEntry {
 
   /** Index that had a doc-level retraction applied (q92): built over the
     * full corpus, then `doc_id % 37 == 0` deleted through
-    * [[graft.index.SearchIndex.delete]] — queries must behave as if
+    * [[graft.index.SearchIndex.bulkDelete]] — queries must behave as if
     * those docs were never indexed (the oracle scores a corpus that
     * excludes them). */
   private def deletedIndexFor(s: SparkSession, d: String): String =
@@ -1309,7 +1309,7 @@ object SparkEntry {
       }),
 
     Q("q92_index_doc_delete",
-      // PII/takedown flow: the persisted index after SearchIndex.delete
+      // PII/takedown flow: the persisted index after SearchIndex.bulkDelete
       // must score exactly like an index that never held the victims —
       // the oracle computes BM25 over the corpus MINUS the deleted docs
       (s, dir) => graft.index.SearchIndex.bm25(s, deletedIndexFor(s, dir),

@@ -103,9 +103,9 @@ object SearchIndex {
 
   /** Incremental index maintenance: fold a batch of NEW docs (disjoint
     * doc_ids from what's indexed) into an existing index without a
-    * rebuild. Postings and vectors are pure partition-local appends;
-    * docfreq and stats are exact merges (disjoint doc sets → df adds,
-    * integer-valued dl sums add) — query results after update are
+    * rebuild. Postings, positions and vectors are partition-local
+    * appends; docfreq and stats are exact merges (disjoint doc sets → df
+    * adds, integer-valued dl sums add) — query results after update are
     * bit-identical to a full rebuild over the union (SearchIndexSpec).
     * At 100 TB this is the difference between touching |batch| data and
     * touching the corpus. */
@@ -113,66 +113,207 @@ object SearchIndex {
       idCol: String = "doc_id", textCol: String = "text",
       vecIdCol: String = "vec_id", vecCol: String = "embedding",
       dim: Int = 64,
-      store: graft.table.CommitStore = graft.table.LocalCommitStore): Unit = {
-    val spark = newDocs.sparkSession
+      store: graft.table.CommitStore = graft.table.LocalCommitStore): Unit =
+    mutate(newDocs.sparkSession, indexDir, None,
+      Some(Delta(newDocs, newEmbs, idCol, textCol, vecIdCol, vecCol, dim)),
+      store)
 
-    val delta = TextSearch.buildPostings(newDocs, idCol, textCol)
-      .withColumn("term_bucket", termBucket(col("term")))
-      .persist()
+  /** ES `_id` upsert (`es_index.py:51-69`): retract the doc ids in the
+    * relation `retract`, then fold `newDocs`/`newEmbs` in — one
+    * mutation, so every bucket both sides touch is rewritten once.
+    * Result ≡ [[bulkDelete]] then [[update]] ≡ a rebuild over the
+    * survivors plus the new docs (SearchIndexSpec). */
+  def upsert(spark: SparkSession, indexDir: String, retract: DataFrame,
+      newDocs: DataFrame, newEmbs: DataFrame,
+      idCol: String = "doc_id", textCol: String = "text",
+      vecIdCol: String = "vec_id", vecCol: String = "embedding",
+      dim: Int = 64,
+      store: graft.table.CommitStore = graft.table.LocalCommitStore): Unit =
+    mutate(spark, indexDir, Some(retract),
+      Some(Delta(newDocs, newEmbs, idCol, textCol, vecIdCol, vecCol, dim)),
+      store)
+
+  /** Doc-level retraction (PII / takedown) driven by a RELATION of ids
+    * (its first column, cast to long): every query after it behaves
+    * exactly as if the index had been built without those docs — terms
+    * whose df reaches 0 leave the dictionary (SearchIndexSpec pins
+    * delete ≡ rebuild). The reference can only drop a whole index
+    * (`elasticsearch_index.py:325-350`). The ids stay a DataFrame end to
+    * end (semi-join for victims, anti-join for survivors), so a 10⁶-id
+    * backfill retraction has the same shape as a one-doc takedown; the
+    * only driver-side lists are touched-bucket ids. */
+  def bulkDelete(spark: SparkSession, indexDir: String, ids: DataFrame,
+      store: graft.table.CommitStore = graft.table.LocalCommitStore): Unit =
+    mutate(spark, indexDir, Some(ids), None, store)
+
+  /** Shard merge: fold the index at `srcDir` into the index at `dstDir`
+    * (disjoint doc sets — the shard-per-partition build pattern, e.g.
+    * one index per ingest slice merged into the serving index). Both
+    * sides bucket with the same [[termBucket]]/LSH expressions, so the
+    * src tables are the delta of an [[update]] as they lie — query
+    * results after merge are bit-identical to one build over the union
+    * (SearchIndexSpec). Touches src-sized data plus the touched docfreq
+    * buckets, never dst's postings. */
+  def merge(spark: SparkSession, srcDir: String, dstDir: String,
+      store: graft.table.CommitStore = graft.table.LocalCommitStore): Unit =
+    mutate(spark, dstDir, None, Some(Delta(
+      spark.read.parquet(s"$srcDir/postings"),
+      spark.read.parquet(s"$srcDir/positions"),
+      spark.read.parquet(s"$srcDir/vectors"))), store)
+
+  /** The postings, positions and vectors of docs being added, bucketed
+    * like the index tables. */
+  private final case class Delta(postings: DataFrame, positions: DataFrame,
+      vectors: DataFrame)
+
+  private object Delta {
+    def apply(docs: DataFrame, embs: DataFrame, idCol: String,
+        textCol: String, vecIdCol: String, vecCol: String,
+        dim: Int): Delta = Delta(
+      TextSearch.buildPostings(docs, idCol, textCol)
+        .withColumn("term_bucket", termBucket(col("term"))),
+      TextSearch.positionalPostings(docs, idCol, textCol)
+        .withColumn("term_bucket", termBucket(col("term"))),
+      embs.select(col(vecIdCol).as("doc_id"), col(vecCol).as("embedding"))
+        .withColumn("lsh_bucket",
+          VectorFunctions.lshSignature(col("embedding"), dim, LshBits)))
+  }
+
+  /** The one mutation behind [[update]], [[upsert]], [[bulkDelete]] and
+    * [[merge]]: retract the doc ids of `retract`, fold `delta` in.
+    *
+    *  1. Stage the victims: their postings are written to
+    *     `__delete_stage` before any swap. A cached lineage is not
+    *     durable — after the postings swap it would re-read the
+    *     rewritten files and find no victims — so docfreq and stats read
+    *     the decrements from the staged copy, and the driver keeps each
+    *     side's [[Side]] scalars from before the first swap.
+    *  2. Postings, positions, vectors: each bucket holding a victim is
+    *     rewritten once, survivors plus the delta's rows for it; the
+    *     delta's rows for every other bucket are appended. A doc's
+    *     positions sit in the same term buckets as its postings (both
+    *     come from [[TextFunctions.tokens]]), so one touched list serves
+    *     both tables.
+    *  3. Docfreq: one signed merge over the touched term buckets. A
+    *     postings row is one (doc, term) pair, so `live + inc − dec` is a
+    *     sum of the live df and ±1 per delta/victim row; `df > 0` keeps
+    *     a term whose last doc left out of the dictionary, as a rebuild
+    *     would have it.
+    *  4. Stats: one swap, `n_docs`/`sum_dl` plus the delta's minus the
+    *     victims'. dl and tf values are integer-valued doubles, so the
+    *     sums are exact and `avgdl` is bit-identical to a rebuild.
+    *
+    * Every rewrite goes through the staged bucket swap of
+    * [[writeSwapBuckets]]: buckets neither side touches keep their exact
+    * bytes. The driver holds only touched-bucket lists, bounded by the
+    * bucket space, never by |ids| or |delta|. */
+  private def mutate(spark: SparkSession, indexDir: String,
+      retract: Option[DataFrame], delta: Option[Delta],
+      store: graft.table.CommitStore): Unit = {
+    val stage = java.nio.file.Paths.get(indexDir, "__delete_stage")
+    // caller data, not index lineage: stays valid across the swaps
+    val ids = retract.map(r =>
+      r.select(col(r.columns.head).cast("long").as("doc_id")))
+    val inc = delta.map(_.postings.persist())
     try {
-      delta.repartition(col("term_bucket"))
-        .write.mode("append").partitionBy("term_bucket")
-        .parquet(s"$indexDir/postings")
+      val dec = ids.map { i =>
+        val victims = cachedTable(spark, indexDir, "postings")
+          .join(i, Seq("doc_id"), "left_semi")
+          .select("term_bucket", "term", "doc_id", "tf")
+        victims.write.mode("overwrite").parquet(s"$stage/victims")
+        spark.read.schema(victims.schema).parquet(s"$stage/victims")
+      }
+      val (decSide, incSide) = (side(dec), side(inc))
+      val retracted = decSide.buckets
+      foldBuckets(spark, indexDir, "postings", "term_bucket", ids,
+        retracted, Some(incSide.buckets), inc, store)
+      foldBuckets(spark, indexDir, "positions", "term_bucket", ids,
+        retracted, Some(incSide.buckets), delta.map(_.positions), store)
 
-      // positions append mirrors postings: new docs are disjoint
-      TextSearch.positionalPostings(newDocs, idCol, textCol)
-        .withColumn("term_bucket", termBucket(col("term")))
-        .repartition(col("term_bucket"))
-        .write.mode("append").partitionBy("term_bucket")
-        .parquet(s"$indexDir/positions")
+      val touched = (retracted ++ incSide.buckets).distinct.sorted
+      if (touched.nonEmpty) {
+        def signed(p: DataFrame, sign: Double) =
+          p.select(col("term_bucket"), col("term"), lit(sign).as("df"))
+        val mergedDf = (Seq(cachedTable(spark, indexDir, "docfreq")
+            .filter(col("term_bucket").isin(touched: _*))
+            .select("term_bucket", "term", "df")) ++
+            inc.map(signed(_, 1.0)) ++ dec.map(signed(_, -1.0)))
+          .reduce(_ unionByName _)
+          .groupBy("term_bucket", "term").agg(sum("df").as("df"))
+          .filter(col("df") > 0)
+        writeSwapBuckets(mergedDf.repartition(col("term_bucket")),
+          s"$indexDir/docfreq", "term_bucket", touched, store)
 
-      // merge docfreq PARTITION-LOCALLY: new docs are disjoint, so
-      // counts simply add — but only the term_buckets present in the
-      // delta need re-merging. Untouched buckets are neither read
-      // (partition-pruned scan) nor rewritten (their files stay
-      // byte-identical; spec pins this). Term dictionaries grow with
-      // corpus vocabulary, so a full-dictionary rewrite per micro-batch
-      // would make update cost O(vocab) instead of O(|batch vocab|).
-      val deltaDf = delta.groupBy("term_bucket", "term")
-        .agg(countDistinct("doc_id").cast("double").as("df"))
-        .persist()
-      // bounded by TermBuckets (64) values — driver-side list is metadata
-      val touched = deltaDf.select("term_bucket").distinct()
-        .collect().map(_.getInt(0)).sorted.toSeq
-      val mergedDf = spark.read.parquet(s"$indexDir/docfreq")
-        .filter(col("term_bucket").isin(touched: _*))
-        .select("term_bucket", "term", "df")
-        .unionByName(deltaDf)
-        .groupBy("term_bucket", "term").agg(sum("df").as("df"))
-      writeSwapBuckets(mergedDf.repartition(col("term_bucket")),
-        s"$indexDir/docfreq", "term_bucket", touched, store)
-      deltaDf.unpersist()
+        val n = col("n_docs") + (incSide.nDocs - decSide.nDocs)
+        val sumDl = col("sum_dl") + (incSide.sumDl - decSide.sumDl)
+        // retracting the LAST doc sends n_docs to 0: avgdl is 0/0,
+        // defined as 0.0 (ANSI would fail the write)
+        writeSwap(cachedTable(spark, indexDir, "stats").select(n.as("n_docs"),
+            coalesce(try_divide(sumDl, n), lit(0.0)).as("avgdl"),
+            sumDl.as("sum_dl")),
+          s"$indexDir/stats", partitionCol = None, store)
+      }
 
-      // merge stats: n adds; sum_dl adds exactly (integer-valued dl)
-      val deltaStats = delta.select("doc_id", "dl").distinct()
-        .agg(count(lit(1)).cast("double").as("d_n"), sum("dl").as("d_sum"))
-      val mergedStats = spark.read.parquet(s"$indexDir/stats")
-        .crossJoin(deltaStats)
-        .select((col("n_docs") + col("d_n")).as("n_docs"),
-          // 0/0 guard (ANSI): an empty update onto an emptied index
-          coalesce(try_divide(col("sum_dl") + col("d_sum"),
-            col("n_docs") + col("d_n")), lit(0.0)).as("avgdl"),
-          (col("sum_dl") + col("d_sum")).as("sum_dl"))
-      writeSwap(mergedStats, s"$indexDir/stats", partitionCol = None, store)
-    } finally delta.unpersist()
+      val retractedV = ids.fold(Seq.empty[Long])(i => bucketsOf(
+        cachedTable(spark, indexDir, "vectors").join(i, Seq("doc_id"), "left_semi"),
+        "lsh_bucket"))
+      // the delta's vector buckets are only worth a job when a rewrite
+      // may already hold all of them
+      val addedV =
+        if (retractedV.isEmpty) None
+        else delta.map(d => bucketsOf(d.vectors, "lsh_bucket"))
+      foldBuckets(spark, indexDir, "vectors", "lsh_bucket", ids,
+        retractedV, addedV, delta.map(_.vectors), store)
+    } finally {
+      inc.foreach(_.unpersist())
+      if (ids.isDefined) store.deleteRecursive(stage)
+      invalidateAll(spark, indexDir)
+    }
+  }
 
-    newEmbs.select(col(vecIdCol).as("doc_id"), col(vecCol).as("embedding"))
-      .withColumn("lsh_bucket",
-        VectorFunctions.lshSignature(col("embedding"), dim, LshBits))
-      .repartition(col("lsh_bucket"))
-      .write.mode("append").partitionBy("lsh_bucket")
-      .parquet(s"$indexDir/vectors")
-    invalidateAll(spark, indexDir)
+  /** One side of a mutation (the staged victims or the delta's postings),
+    * read once before any swap: its term buckets, docs and dl sum (a
+    * doc's tf values add up to its dl). */
+  private final case class Side(buckets: Seq[Long], nDocs: Double,
+      sumDl: Double)
+
+  private def side(postings: Option[DataFrame]): Side =
+    postings.fold(Side(Nil, 0, 0)) { p =>
+      val r = p.agg(collect_set(col("term_bucket").cast("long")),
+        countDistinct("doc_id"), sum("tf")).head()
+      Side(r.getSeq[Long](0).sorted, r.getLong(1).toDouble,
+        if (r.isNullAt(2)) 0.0 else r.getDouble(2))
+    }
+
+  /** Distinct values of a bucket column, as longs. Metadata-scale (at
+    * most the bucket space), so the list lives on the driver. Partition
+    * type inference may read a bucket column back as int. */
+  private def bucketsOf(df: DataFrame, bucketCol: String): Seq[Long] =
+    df.select(col(bucketCol).cast("long")).distinct()
+      .collect().map(_.getLong(0)).sorted.toSeq
+
+  /** One table's share of [[mutate]]: the `retracted` buckets are
+    * rewritten once (survivors of `ids` plus `rows` for those buckets);
+    * `rows` for the other buckets are appended. `added` (the buckets of
+    * `rows`, when known) skips an empty append. */
+  private def foldBuckets(spark: SparkSession, indexDir: String,
+      table: String, bucketCol: String, ids: Option[DataFrame],
+      retracted: Seq[Long], added: Option[Seq[Long]], rows: Option[DataFrame],
+      store: graft.table.CommitStore): Unit = {
+    val dir = s"$indexDir/$table"
+    val inRetracted = col(bucketCol).isin(retracted: _*)
+    if (retracted.nonEmpty) {
+      val live = cachedTable(spark, indexDir, table).filter(inRetracted)
+      val survivors = ids.fold(live)(live.join(_, Seq("doc_id"), "left_anti"))
+      writeSwapBuckets(
+        rows.fold(survivors)(r => survivors.unionByName(r.filter(inRetracted)))
+          .repartition(col(bucketCol)),
+        dir, bucketCol, retracted, store)
+    }
+    for (r <- rows if added.forall(_.exists(b => !retracted.contains(b))))
+      (if (retracted.isEmpty) r else r.filter(!inRetracted))
+        .repartition(col(bucketCol))
+        .write.mode("append").partitionBy(bucketCol).parquet(dir)
   }
 
   /** Fuzzy query-term expansion (ES `fuzziness: 1`): match each query
@@ -550,56 +691,6 @@ object SearchIndex {
             sum(col("df")).cast("long").as("n_postings"),
             max(col("df")).cast("long").as("max_df"))))
 
-  /** Shard merge: fold the index at `srcDir` into the index at `dstDir`
-    * (disjoint doc sets — the shard-per-partition build pattern, e.g.
-    * one index per ingest slice merged into the serving index). Both
-    * sides bucket with the same [[termBucket]]/LSH expressions, so
-    * postings/positions/vectors fold as partition-local appends and
-    * docfreq/stats as the exact merges [[update]] uses — query results
-    * after merge are bit-identical to one build over the union
-    * (SearchIndexSpec). Touches src-sized data plus the touched
-    * docfreq buckets, never dst's postings. */
-  def merge(spark: SparkSession, srcDir: String, dstDir: String,
-      store: graft.table.CommitStore = graft.table.LocalCommitStore): Unit = {
-    spark.read.parquet(s"$srcDir/postings")
-      .repartition(col("term_bucket"))
-      .write.mode("append").partitionBy("term_bucket")
-      .parquet(s"$dstDir/postings")
-    spark.read.parquet(s"$srcDir/positions")
-      .repartition(col("term_bucket"))
-      .write.mode("append").partitionBy("term_bucket")
-      .parquet(s"$dstDir/positions")
-
-    val srcDf = spark.read.parquet(s"$srcDir/docfreq")
-      .select("term_bucket", "term", "df")
-    // bounded by TermBuckets (64) — driver-side list is metadata
-    val touched = srcDf.select("term_bucket").distinct()
-      .collect().map(_.getInt(0)).sorted.toSeq
-    val mergedDf = spark.read.parquet(s"$dstDir/docfreq")
-      .filter(col("term_bucket").isin(touched: _*))
-      .select("term_bucket", "term", "df")
-      .unionByName(srcDf)
-      .groupBy("term_bucket", "term").agg(sum("df").as("df"))
-    writeSwapBuckets(mergedDf.repartition(col("term_bucket")),
-      s"$dstDir/docfreq", "term_bucket", touched, store)
-
-    val srcStats = spark.read.parquet(s"$srcDir/stats")
-      .select(col("n_docs").as("d_n"), col("sum_dl").as("d_sum"))
-    val mergedStats = spark.read.parquet(s"$dstDir/stats")
-      .crossJoin(srcStats) // 1-row × 1-row
-      .select((col("n_docs") + col("d_n")).as("n_docs"),
-        ((col("sum_dl") + col("d_sum")) / (col("n_docs") + col("d_n")))
-          .as("avgdl"),
-        (col("sum_dl") + col("d_sum")).as("sum_dl"))
-    writeSwap(mergedStats, s"$dstDir/stats", partitionCol = None, store)
-
-    spark.read.parquet(s"$srcDir/vectors")
-      .repartition(col("lsh_bucket"))
-      .write.mode("append").partitionBy("lsh_bucket")
-      .parquet(s"$dstDir/vectors")
-    invalidateAll(spark, dstDir)
-  }
-
   /** Write `df` to a staging dir then swap it in through the
     * [[graft.table.CommitStore]] commit primitive (Spark cannot
     * overwrite a parquet dir that feeds the running plan). The local
@@ -664,199 +755,6 @@ object SearchIndex {
     store.deleteRecursive(Paths.get(tmp))
     if (bucketDirs().isEmpty) // every bucket emptied: publish the marker
       writeSwap(df.limit(0), dir, partitionCol = None, store)
-  }
-
-  /** Doc-level retraction (PII / takedown): remove `ids` from postings,
-    * positions and vectors, decrement docfreq (terms whose df reaches 0
-    * disappear, as a rebuild would have it), and subtract the victims
-    * from stats — so every query AFTER delete behaves exactly as if the
-    * index had been built without those docs (SearchIndexSpec pins
-    * delete ≡ rebuild). The reference can only drop a whole index
-    * (`elasticsearch_index.py:325-350`); an LLM-pipeline index needs the
-    * per-doc form.
-    *
-    * Scale shape: ONE pruned-column scan over postings/vectors finds the
-    * victims' rows and their touched buckets (a doc's terms hash across
-    * the bucket space, so no tighter bound exists without a doc→terms
-    * sidecar); rewrites then touch ONLY those buckets, partition-locally,
-    * through the same staged-swap commit as [[update]]. Untouched bucket
-    * dirs keep their exact bytes. */
-  def delete(spark: SparkSession, indexDir: String, ids: Seq[Long],
-      store: graft.table.CommitStore = graft.table.LocalCommitStore): Unit = {
-    if (ids.isEmpty) return
-    val isVictim = col("doc_id").isInCollection(ids)
-
-    val postings = spark.read.parquet(s"$indexDir/postings")
-    val victims = postings.filter(isVictim).persist()
-    // Every victim-derived aggregate is MATERIALIZED ON THE DRIVER before
-    // the first swap. A persist() is not durable: cache eviction or
-    // executor loss recomputes the lineage, and after the postings swap
-    // that lineage re-reads the already-rewritten files — zero victim
-    // rows, so docfreq/stats would silently diverge from the postings
-    // (corrupted BM25 idf/avgdl, no error). All three collects are
-    // metadata-scale: touched buckets ≤ TermBuckets; df decrements ≤
-    // |victim docs| × their distinct terms (a takedown batch, not the
-    // corpus); the stats delta is one row.
-    val (touched, decRows, dN, dSum) = try {
-      val touched = victims.select("term_bucket").distinct()
-        .collect().map(_.getInt(0)).sorted.toSeq
-      val decRows = victims.groupBy("term_bucket", "term")
-        .agg(countDistinct("doc_id").cast("double").as("ddf"))
-        .collect().map(r => (r.getInt(0), r.getString(1), r.getDouble(2)))
-        .toSeq
-      // integer-valued dl sums subtract exactly, mirroring update's merge
-      val s = victims.select("doc_id", "dl").distinct()
-        .agg(count(lit(1)).cast("double").as("d_n"), sum("dl").as("d_sum"))
-        .collect()(0)
-      (touched, decRows, s.getDouble(0), if (s.isNullAt(1)) 0.0 else s.getDouble(1))
-    } finally victims.unpersist()
-
-    if (touched.nonEmpty) {
-      val positions = spark.read.parquet(s"$indexDir/positions")
-      val touchedPos = positions
-        .filter(isVictim).select("term_bucket").distinct()
-        .collect().map(_.getInt(0)).sorted.toSeq
-
-      writeSwapBuckets(
-        postings.filter(col("term_bucket").isin(touched: _*) && !isVictim)
-          .repartition(col("term_bucket")),
-        s"$indexDir/postings", "term_bucket", touched, store)
-
-      if (touchedPos.nonEmpty) writeSwapBuckets(
-        positions.filter(col("term_bucket").isin(touchedPos: _*) && !isVictim)
-          .repartition(col("term_bucket")),
-        s"$indexDir/positions", "term_bucket", touchedPos, store)
-
-      // docfreq: per-term decrement by the victims' distinct-doc count
-      // (from the pre-swap driver copy); df exhausted ⇒ the term leaves
-      // the dictionary
-      import spark.implicits._
-      val dec = decRows.toDF("term_bucket", "term", "ddf")
-      val mergedDf = spark.read.parquet(s"$indexDir/docfreq")
-        .filter(col("term_bucket").isin(touched: _*))
-        .join(broadcast(dec), Seq("term_bucket", "term"), "left")
-        .select(col("term_bucket"), col("term"),
-          (col("df") - coalesce(col("ddf"), lit(0.0))).as("df"))
-        .filter(col("df") > 0)
-      writeSwapBuckets(mergedDf.repartition(col("term_bucket")),
-        s"$indexDir/docfreq", "term_bucket", touched, store)
-
-      // stats: subtract the pre-swap scalar delta
-      // retracting the LAST doc empties the index: n_docs hits 0 and
-      // avgdl is 0/0 — define it as 0.0 (bm25 never reads avgdl from an
-      // empty index, but the stats row must still write)
-      val mergedStats = spark.read.parquet(s"$indexDir/stats")
-        .select((col("n_docs") - lit(dN)).as("n_docs"),
-          coalesce(try_divide(col("sum_dl") - lit(dSum),
-            col("n_docs") - lit(dN)), lit(0.0)).as("avgdl"),
-          (col("sum_dl") - lit(dSum)).as("sum_dl"))
-      writeSwap(mergedStats, s"$indexDir/stats", partitionCol = None,
-        store)
-    }
-
-    val vectors = spark.read.parquet(s"$indexDir/vectors")
-    // partition-column type inference may narrow lsh_bucket to int —
-    // cast so the collected probe list is stable
-    val touchedV = vectors.filter(isVictim)
-      .select(col("lsh_bucket").cast("long")).distinct()
-      .collect().map(_.getLong(0)).sorted.toSeq
-    if (touchedV.nonEmpty) writeSwapBuckets(
-      vectors.filter(col("lsh_bucket").isin(touchedV: _*) && !isVictim)
-        .repartition(col("lsh_bucket")),
-      s"$indexDir/vectors", "lsh_bucket", touchedV, store)
-    invalidateAll(spark, indexDir)
-  }
-
-  /** Bulk doc-level retraction driven by a RELATION of ids — the
-    * scale-safe twin of [[delete]]. The Seq form literal-lists the ids
-    * into the plan and collects per-term decrements to the driver: the
-    * right call for a PII micro-batch (its stated contract), unusable
-    * for a 10⁶-id backfill retraction. Here ids stay a DataFrame end to
-    * end: victims are found by semi-join, survivors by anti-join, and
-    * the per-term df decrements are MATERIALIZED TO A STAGING DIR
-    * before the first bucket swap (the durability the Seq form buys
-    * with driver copies — a cached lineage would re-read the already-
-    * rewritten buckets) and merged back as a relation join. The only
-    * driver-side lists are the touched-bucket ids, bounded by the
-    * bucket-space knobs, never by |ids|. The ids relation itself is
-    * caller data, not index lineage, so it stays valid across swaps.
-    * Result ≡ [[delete]] ≡ rebuild without the victims
-    * (SearchIndexSpec pins all three). */
-  def bulkDelete(spark: SparkSession, indexDir: String, ids: DataFrame,
-      store: graft.table.CommitStore = graft.table.LocalCommitStore): Unit = {
-    val idRel = ids.select(col(ids.columns.head).cast("long").as("doc_id"))
-    val stage = s"$indexDir/__delete_stage"
-
-    val postings = spark.read.parquet(s"$indexDir/postings")
-    postings.join(idRel, Seq("doc_id"), "left_semi")
-      .select("term_bucket", "term", "doc_id", "dl")
-      .write.mode("overwrite").parquet(s"$stage/victim_postings")
-    val vp = spark.read.parquet(s"$stage/victim_postings")
-    // touched buckets: ≤ TermBuckets rows — a knob, not data-scale
-    val touched = vp.select("term_bucket").distinct()
-      .collect().map(_.getInt(0)).sorted.toSeq
-
-    if (touched.nonEmpty) {
-      val positions = spark.read.parquet(s"$indexDir/positions")
-      val touchedPos = positions.join(idRel, Seq("doc_id"), "left_semi")
-        .select("term_bucket").distinct()
-        .collect().map(_.getInt(0)).sorted.toSeq
-      // per-term df decrements: relation-sized, staged — never driver-side
-      vp.groupBy("term_bucket", "term")
-        .agg(countDistinct("doc_id").cast("double").as("ddf"))
-        .write.mode("overwrite").parquet(s"$stage/dec")
-      // one-row stats delta (driver scalar, scale-independent)
-      val s0 = vp.select("doc_id", "dl").distinct()
-        .agg(count(lit(1)).cast("double").as("d_n"), sum("dl").as("d_sum"))
-        .collect()(0)
-      val dN = s0.getDouble(0)
-      val dSum = if (s0.isNullAt(1)) 0.0 else s0.getDouble(1)
-
-      writeSwapBuckets(
-        postings.filter(col("term_bucket").isin(touched: _*))
-          .join(idRel, Seq("doc_id"), "left_anti")
-          .repartition(col("term_bucket")),
-        s"$indexDir/postings", "term_bucket", touched, store)
-
-      if (touchedPos.nonEmpty) writeSwapBuckets(
-        positions.filter(col("term_bucket").isin(touchedPos: _*))
-          .join(idRel, Seq("doc_id"), "left_anti")
-          .repartition(col("term_bucket")),
-        s"$indexDir/positions", "term_bucket", touchedPos, store)
-
-      val dec = spark.read.parquet(s"$stage/dec")
-      val mergedDf = spark.read.parquet(s"$indexDir/docfreq")
-        .filter(col("term_bucket").isin(touched: _*))
-        .join(dec, Seq("term_bucket", "term"), "left")
-        .select(col("term_bucket"), col("term"),
-          (col("df") - coalesce(col("ddf"), lit(0.0))).as("df"))
-        .filter(col("df") > 0)
-      writeSwapBuckets(mergedDf.repartition(col("term_bucket")),
-        s"$indexDir/docfreq", "term_bucket", touched, store)
-
-      // retracting the LAST doc empties the index: n_docs hits 0 and
-      // avgdl is 0/0 — define it as 0.0 (bm25 never reads avgdl from an
-      // empty index, but the stats row must still write)
-      val mergedStats = spark.read.parquet(s"$indexDir/stats")
-        .select((col("n_docs") - lit(dN)).as("n_docs"),
-          coalesce(try_divide(col("sum_dl") - lit(dSum),
-            col("n_docs") - lit(dN)), lit(0.0)).as("avgdl"),
-          (col("sum_dl") - lit(dSum)).as("sum_dl"))
-      writeSwap(mergedStats, s"$indexDir/stats", partitionCol = None,
-        store)
-    }
-
-    val vectors = spark.read.parquet(s"$indexDir/vectors")
-    val touchedV = vectors.join(idRel, Seq("doc_id"), "left_semi")
-      .select(col("lsh_bucket").cast("long")).distinct()
-      .collect().map(_.getLong(0)).sorted.toSeq
-    if (touchedV.nonEmpty) writeSwapBuckets(
-      vectors.filter(col("lsh_bucket").isin(touchedV: _*))
-        .join(idRel, Seq("doc_id"), "left_anti")
-        .repartition(col("lsh_bucket")),
-      s"$indexDir/vectors", "lsh_bucket", touchedV, store)
-    store.deleteRecursive(java.nio.file.Paths.get(stage))
-    invalidateAll(spark, indexDir)
   }
 
   /** Maintenance — merge the small files that incremental [[update]]s

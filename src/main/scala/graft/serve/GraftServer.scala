@@ -3,6 +3,8 @@ package graft.serve
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Path, Paths}
+import java.util.concurrent.ConcurrentHashMap
+import java.util.concurrent.locks.ReentrantReadWriteLock
 
 import scala.collection.immutable.ListMap
 import scala.jdk.CollectionConverters._
@@ -27,7 +29,7 @@ import graft.table.ParquetCatalog
   *  - upload routes → local staging dirs (`upload.py:13-105`)
   *  - parser routes → [[PdfPageExtractor]] + the reference's page
   *    metadata contract (`parser.py:18-90`, `parsing.py:98-230`)
-  *  - index/search routes → [[SearchIndex]] build/update/hybrid
+  *  - index/search routes → [[SearchIndex]] build/upsert/hybrid
   *    (`es_index.py:51-180`, `elasticsearch_index.py:113-306`)
   *
   * Response shapes mirror the reference's JSON (field names, nesting,
@@ -43,7 +45,11 @@ import graft.table.ParquetCatalog
   * distinct-keys list the reference also returns in full). Request
   * handling runs on a bounded thread pool; Spark serializes the actual
   * work through its own scheduler exactly as concurrent notebook users
-  * would.
+  * would. Per index, writers (`/index/document`, `DELETE /indices`)
+  * exclude each other and the readers (`/search`, `/document`): an
+  * upsert swaps index files under a reader's plan, and two upserts
+  * would share the index's stage dir. Readers wait; they never fail on
+  * a half-applied write.
   *
   * Known deviations, both documented where they occur: chunked upload
   * APPENDS chunks (the reference's docstring contract; its code reopens
@@ -67,6 +73,16 @@ final class GraftServer(
   Files.createDirectories(indicesDir)
 
   private val extractor: PageExtractor = PdfPageExtractor(ocr = ocr)
+
+  private val locks = new ConcurrentHashMap[String, ReentrantReadWriteLock]
+
+  /** Run `body` under index `name`'s write lock (`write`) or read lock. */
+  private def locked[T](name: String, write: Boolean)(body: => T): T = {
+    val rw = locks.computeIfAbsent(name, _ => new ReentrantReadWriteLock)
+    val l = if (write) rw.writeLock else rw.readLock
+    l.lock()
+    try body finally l.unlock()
+  }
 
   private val server = HttpServer.create(new InetSocketAddress(port), 0)
   server.setExecutor(java.util.concurrent.Executors.newFixedThreadPool(8))
@@ -469,63 +485,64 @@ final class GraftServer(
       .withColumn("doc_id", TextFunctions.md5Long(col("id")))
 
   /** POST /index/document (`es_index.py:51-69`): fetch the table rows of
-    * one source file and index them. Re-indexing the same file first
-    * retracts its previous rows ([[SearchIndex.bulkDelete]]) — ES `_id`
-    * upsert parity, not double-counting. */
+    * one source file and index them. Re-indexing the same file replaces
+    * its previous rows in one [[SearchIndex.upsert]] — ES `_id` upsert
+    * parity, not double-counting. */
   private def indexDocumentRoute(req: JObj): Http = {
     val idxName = req.str("index_name").getOrElse(fail(400, "index_name required"))
     val table   = req.str("table_name").getOrElse(fail(400, "table_name required"))
     val hfp     = req.str("hashed_filepath").getOrElse(fail(400, "hashed_filepath required"))
     if (!catalog.tableExists(table)) fail(500, s"no such table: $table")
     val dir = indexDir(idxName)
-    val rows = keyedRows(table, hfp).cache()
-    try {
-      if (rows.isEmpty) fail(500, s"no rows for hashed_filepath: $hfp in table: $table")
-      val docs = rows.select(col("doc_id"), col("page_content").as("text"))
-      // embeddings may be typed (array<float>, the engine's native shape)
-      // or a TEXT vector string (the reference's RDB schema) — F10 parse
-      val embCol = rows.schema("embeddings").dataType match {
-        case _: StringType =>
-          graft.functions.VectorFunctions.parseVectorString(col("embeddings"))
-        case _ => col("embeddings").cast(ArrayType(FloatType))
-      }
-      val embs = rows.select(col("doc_id").as("vec_id"), embCol.as("embedding"))
-      val srcDir = dir.resolve("source")
-      if (!indexExists(idxName)) {
-        SearchIndex.build(docs, embs, dir.toString, dim = embedder.dim)
-        rows.write.mode("overwrite").parquet(srcDir.toString)
-      } else {
-        val prior = spark.read.parquet(srcDir.toString)
-          .filter(col("hashed_filepath") === hfp).select("doc_id")
-        if (!prior.isEmpty)
-          SearchIndex.bulkDelete(spark, dir.toString, prior)
-        SearchIndex.update(docs, embs, dir.toString, dim = embedder.dim)
-        val kept = spark.read.parquet(srcDir.toString)
-          .filter(col("hashed_filepath") =!= hfp)
-        val tmp = dir.resolve("source__tmp")
-        kept.unionByName(rows).write.mode("overwrite").parquet(tmp.toString)
-        deleteRec(srcDir)
-        Files.move(tmp, srcDir)
-      }
-      ok(JObj(
-        "message" -> JStr(s"[$idxName] indexing complete"),
-        "hashed_filepath" -> JStr(hfp)))
-    } finally rows.unpersist()
+    locked(idxName, write = true) {
+      val rows = keyedRows(table, hfp).cache()
+      try {
+        if (rows.isEmpty) fail(500, s"no rows for hashed_filepath: $hfp in table: $table")
+        val docs = rows.select(col("doc_id"), col("page_content").as("text"))
+        // embeddings may be typed (array<float>, the engine's native shape)
+        // or a TEXT vector string (the reference's RDB schema) — F10 parse
+        val embCol = rows.schema("embeddings").dataType match {
+          case _: StringType =>
+            graft.functions.VectorFunctions.parseVectorString(col("embeddings"))
+          case _ => col("embeddings").cast(ArrayType(FloatType))
+        }
+        val embs = rows.select(col("doc_id").as("vec_id"), embCol.as("embedding"))
+        val srcDir = dir.resolve("source")
+        if (!indexExists(idxName)) {
+          SearchIndex.build(docs, embs, dir.toString, dim = embedder.dim)
+          rows.write.mode("overwrite").parquet(srcDir.toString)
+        } else {
+          val src = spark.read.parquet(srcDir.toString)
+          SearchIndex.upsert(spark, dir.toString,
+            src.filter(col("hashed_filepath") === hfp).select("doc_id"),
+            docs, embs, dim = embedder.dim)
+          val tmp = dir.resolve("source__tmp")
+          src.filter(col("hashed_filepath") =!= hfp).unionByName(rows)
+            .write.mode("overwrite").parquet(tmp.toString)
+          deleteRec(srcDir)
+          Files.move(tmp, srcDir)
+        }
+        ok(JObj(
+          "message" -> JStr(s"[$idxName] indexing complete"),
+          "hashed_filepath" -> JStr(hfp)))
+      } finally rows.unpersist()
+    }
   }
 
   /** GET /document/{index}/{hashed_filepath} (`es_index.py:72-88`):
     * every page/chunk of one source file — term-exact keyword match,
     * 404 when absent. */
-  private def getDocumentRoute(idxName: String, hfp: String): Http = {
-    if (!indexExists(idxName)) fail(404, s"[$idxName] document '$hfp' not found")
-    val src = spark.read.parquet(indexDir(idxName).resolve("source").toString)
-    val sortCols = Seq("page", "id").filter(src.columns.contains)
-    val rows = src.filter(col("hashed_filepath") === hfp)
-      .orderBy(sortCols.map(col): _*).drop("doc_id")
-      .collect().toSeq
-    if (rows.isEmpty) fail(404, s"[$idxName] document '$hfp' not found")
-    ok(rowsJson(rows))
-  }
+  private def getDocumentRoute(idxName: String, hfp: String): Http =
+    locked(idxName, write = false) {
+      if (!indexExists(idxName)) fail(404, s"[$idxName] document '$hfp' not found")
+      val src = spark.read.parquet(indexDir(idxName).resolve("source").toString)
+      val sortCols = Seq("page", "id").filter(src.columns.contains)
+      val rows = src.filter(col("hashed_filepath") === hfp)
+        .orderBy(sortCols.map(col): _*).drop("doc_id")
+        .collect().toSeq
+      if (rows.isEmpty) fail(404, s"[$idxName] document '$hfp' not found")
+      ok(rowsJson(rows))
+    }
 
   /** POST /search (`es_index.py:90-131`): hybrid BM25 + kNN with the
     * reference's knobs (size 5 default, 1–100; min_score 0.5; boosts
@@ -541,20 +558,21 @@ final class GraftServer(
     require(size >= 1 && size <= 100, s"size out of range: $size")
     val minScore = req.num("min_score").getOrElse(0.5)
     require(minScore >= 0.0 && minScore <= 1.0, s"min_score out of range: $minScore")
-    if (!indexExists(idxName)) fail(503, s"index not found: $idxName")
-
     val qVec = embedder.embed(queryText)
     if (qVec.length != embedder.dim)
       fail(400, s"embedding dimension error: ${qVec.length} (${embedder.dim} required)")
 
     val dir = indexDir(idxName)
-    val hits = SearchIndex.hybrid(spark, dir.toString, queryText, embedder,
-      size = size, minScore = minScore)
-    val src = spark.read.parquet(dir.resolve("source").toString)
-    val shaped = hits.join(src, Seq("doc_id"), "inner")
-      .orderBy(col("score").desc, col("doc_id").asc)
-      .drop("doc_id")
-      .collect().toSeq
+    val shaped = locked(idxName, write = false) {
+      if (!indexExists(idxName)) fail(503, s"index not found: $idxName")
+      val hits = SearchIndex.hybrid(spark, dir.toString, queryText, embedder,
+        size = size, minScore = minScore)
+      val src = spark.read.parquet(dir.resolve("source").toString)
+      hits.join(src, Seq("doc_id"), "inner")
+        .orderBy(col("score").desc, col("doc_id").asc)
+        .drop("doc_id")
+        .collect().toSeq
+    }
 
     val results = shaped.map { r =>
       val fields = rowJson(r).fields
@@ -581,14 +599,16 @@ final class GraftServer(
   /** DELETE /indices/{name} (`es_index.py:167-180`). */
   private def deleteIndexRoute(name: String): Http = {
     val dir = indexDir(name)
-    if (!Files.isDirectory(dir))
-      ok(JObj("index_name" -> JStr(name), "deleted" -> JBool(false),
-        "message" -> JStr(s"index '$name' does not exist")))
-    else {
-      deleteRec(dir)
-      spark.catalog.clearCache()
-      ok(JObj("index_name" -> JStr(name), "deleted" -> JBool(true),
-        "message" -> JStr(s"index '$name' deleted")))
+    locked(name, write = true) {
+      if (!Files.isDirectory(dir))
+        ok(JObj("index_name" -> JStr(name), "deleted" -> JBool(false),
+          "message" -> JStr(s"index '$name' does not exist")))
+      else {
+        deleteRec(dir)
+        spark.catalog.clearCache()
+        ok(JObj("index_name" -> JStr(name), "deleted" -> JBool(true),
+          "message" -> JStr(s"index '$name' deleted")))
+      }
     }
   }
 

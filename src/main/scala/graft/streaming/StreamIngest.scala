@@ -130,38 +130,27 @@ object StreamIngest {
 
   /** Apply one batch of CDC rows (the [[graft.table.SnapshotCatalog.diff]]
     * shape: `doc_id`, `text`, `change` ∈ inserted/updated/deleted) to the
-    * persisted search index: retract every changed doc_id first
-    * ([[graft.index.SearchIndex.delete]]), then (re)index the
-    * non-deleted rows. Retract-then-insert makes the WHOLE batch
-    * IDEMPOTENT — a replayed batch deletes its own previous application
-    * and re-adds identical rows — which is what upgrades the streaming
-    * sink's at-least-once `foreachBatch` to an exactly-once index
-    * effect, with no cross-store transaction. Cost per batch:
+    * persisted search index in one [[graft.index.SearchIndex.upsert]]:
+    * retract every changed doc_id (the batch itself is the id relation)
+    * and (re)index the non-deleted rows. Retract-then-insert makes the
+    * WHOLE batch IDEMPOTENT — a replayed batch retracts its own previous
+    * application and re-adds identical rows — which is what upgrades the
+    * streaming sink's at-least-once `foreachBatch` to an exactly-once
+    * index effect, with no cross-store transaction. Cost per batch:
     * |batch| data + the touched buckets, never the corpus. */
   def applyCdcBatch(batch: DataFrame, indexDir: String,
       embedder: Embedder): Unit = {
-    val spark = batch.sparkSession
-    val exists = java.nio.file.Files.exists(
-      java.nio.file.Paths.get(indexDir, "stats"))
-    // micro-batch-sized driver list (same bound as any PII delete call)
-    val ids = batch.select(col("doc_id").cast("long")).distinct()
-      .collect().map(_.getLong(0)).toSeq
-    if (exists) graft.index.SearchIndex.delete(spark, indexDir, ids)
-    val upserts = batch.filter(col("change") =!= "deleted")
-      .select(col("doc_id").cast("long").as("doc_id"), col("text"))
-    if (!upserts.isEmpty) {
-      val withEmb = BatchEmbed.withEmbedding(
-        upserts, "text", "embedding", embedder)
-      val docs = withEmb.select(col("doc_id"), col("text"))
-      val embs = withEmb.select(col("doc_id").as("vec_id"),
-        col("embedding"))
-      if (exists)
-        graft.index.SearchIndex.update(docs, embs, indexDir,
-          dim = embedder.dim)
-      else
-        graft.index.SearchIndex.build(docs, embs, indexDir,
-          dim = embedder.dim)
-    }
+    val withEmb = BatchEmbed.withEmbedding(
+      batch.filter(col("change") =!= "deleted")
+        .select(col("doc_id").cast("long").as("doc_id"), col("text")),
+      "text", "embedding", embedder)
+    val docs = withEmb.select(col("doc_id"), col("text"))
+    val embs = withEmb.select(col("doc_id").as("vec_id"), col("embedding"))
+    if (java.nio.file.Files.exists(java.nio.file.Paths.get(indexDir, "stats")))
+      graft.index.SearchIndex.upsert(batch.sparkSession, indexDir,
+        batch.select("doc_id"), docs, embs, dim = embedder.dim)
+    else if (!docs.isEmpty)
+      graft.index.SearchIndex.build(docs, embs, indexDir, dim = embedder.dim)
   }
 
   /** Streaming percolation — standing-query alerting over the ingest

@@ -434,7 +434,7 @@ class SearchIndexSpec extends SparkSpec {
     val beforeP = fingerprintDir(Paths.get(dA, "postings"), "term_bucket=")
     val beforeD = fingerprintDir(Paths.get(dA, "docfreq"), "term_bucket=")
 
-    SearchIndex.delete(spark, dA, Seq(910001L, 910002L))
+    SearchIndex.bulkDelete(spark, dA, Seq(910001L, 910002L).toDF("doc_id"))
 
     // only the victims' term buckets were rewritten
     val touched = Seq("qqalpha", "qqbeta", "qqgamma")
@@ -530,6 +530,125 @@ class SearchIndexSpec extends SparkSpec {
       .filter(col("doc_id").isin(910001L, 910002L)).count() === 0)
     // the staging dir is cleaned up after the commit
     assert(!Files.exists(Paths.get(dB, "__delete_stage")))
+  }
+
+  /** Float vectors for the controlled-vocabulary fixtures: doc id →
+    * the constant every coordinate takes. */
+  private def constEmbs(rows: (Long, Float)*) = {
+    import spark.implicits._
+    rows.map { case (id, x) => (id, Array.fill(64)(x).toSeq) }
+      .toDF("vec_id", "embedding")
+      .select(col("vec_id"), col("embedding").cast("array<float>"))
+  }
+
+  test("upsert ≡ build over the final corpus; buckets neither side touches byte-identical") {
+    import spark.implicits._
+    val docs = Tables.documents(spark, SfDir).select("doc_id", "text")
+    val embs = Tables.embeddings(spark, SfDir).select("vec_id", "embedding")
+    val vDocs = Seq((910001L, "qqalpha qqbeta qqalpha"),
+      (910002L, "qqbeta qqgamma")).toDF("doc_id", "text")
+    val vEmbs = constEmbs(910001L -> 0.1f, 910002L -> 0.2f)
+    val victimIds = Seq(910001L, 910002L)
+    // (name, new docs, new embeddings, the new docs' terms)
+    val cases = Seq(
+      ("unchanged doc set", vDocs, vEmbs, Seq("qqalpha", "qqbeta", "qqgamma")),
+      ("changed text, fewer docs",
+        Seq((910001L, "qqdelta qqalpha qqdelta")).toDF("doc_id", "text"),
+        constEmbs(910001L -> -0.3f), Seq("qqdelta", "qqalpha")))
+    cases.foreach { case (name, newDocs, newEmbs, newTerms) =>
+      val d = Files.createTempDirectory("index_ups").toString
+      SearchIndex.build(docs.unionByName(vDocs), embs.unionByName(vEmbs), d)
+      val ref = Files.createTempDirectory("index_ups_ref").toString
+      SearchIndex.build(docs.unionByName(newDocs), embs.unionByName(newEmbs),
+        ref)
+      def lshBuckets(dir: String) = spark.read.parquet(s"$dir/vectors")
+        .filter(col("doc_id").isin(victimIds: _*))
+        .select("lsh_bucket").collect().map(r => s"lsh_bucket=${r.get(0)}")
+      val touchedV = (lshBuckets(d) ++ lshBuckets(ref)).toSet
+      val touchedT = (Seq("qqalpha", "qqbeta", "qqgamma") ++ newTerms)
+        .map(t => s"term_bucket=${SearchIndex.termBucketOf(t)}").toSet
+      val tables = Seq("postings" -> "term_bucket=", "positions" -> "term_bucket=",
+        "docfreq" -> "term_bucket=", "vectors" -> "lsh_bucket=")
+      val before = tables.map { case (t, pre) =>
+        t -> fingerprintDir(Paths.get(d, t), pre) }.toMap
+
+      SearchIndex.upsert(spark, d, victimIds.toDF("doc_id"), newDocs, newEmbs)
+
+      tables.foreach { case (t, pre) =>
+        val touched = if (t == "vectors") touchedV else touchedT
+        val after = fingerprintDir(Paths.get(d, t), pre)
+        val untouched = before(t).keySet -- touched
+        assert(untouched.nonEmpty, s"$name: fixture touched every $t bucket")
+        untouched.foreach { b =>
+          assert(after(b) === before(t)(b), s"$name: untouched $t $b rewritten")
+        }
+      }
+
+      val q = "spark join merge sort window qqalpha qqbeta qqdelta"
+      def bm(dir: String) = SearchIndex.bm25(spark, dir, q)
+        .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+      val (upBm, refBm) = (bm(d), bm(ref))
+      assert(upBm.keySet === refBm.keySet, name)
+      upBm.foreach { case (k, v) => assert(math.abs(v - refBm(k)) < 1e-9, name) }
+
+      val e = DeterministicEmbedder(64)
+      def knn(dir: String) = SearchIndex.knn(spark, dir, e.embed(q), 10,
+          probeHammingRadius = SearchIndex.LshBits)
+        .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+      assert(knn(d) === knn(ref), name)
+      def knnSelf(dir: String) = SearchIndex.knn(spark, dir,
+          Array.fill(64)(-0.3f), 3, probeHammingRadius = SearchIndex.LshBits)
+        .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+      assert(knnSelf(d) === knnSelf(ref), name)
+
+      Seq("table scan", "qqalpha qqbeta", "qqdelta qqalpha").foreach { p =>
+        def ph(dir: String) = SearchIndex.phrase(spark, dir, p)
+          .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+        assert(ph(d) === ph(ref), s"$name: phrase '$p'")
+      }
+      def dict(dir: String) = spark.read.parquet(s"$dir/docfreq")
+        .select("term", "df").as[(String, Double)].collect().toSet
+      assert(dict(d) === dict(ref), name)
+      assert(spark.read.parquet(s"$d/stats").head() ===
+        spark.read.parquet(s"$ref/stats").head(), name)
+      assert(!Files.exists(Paths.get(d, "__delete_stage")))
+    }
+  }
+
+  test("Spark jobs per call of update, bulkDelete and upsert") {
+    import java.util.concurrent.atomic.AtomicInteger
+    import org.apache.spark.SpecBus
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import spark.implicits._
+    val jobs = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    def jobsIn(f: => Unit): Int = {
+      SpecBus.drain(spark.sparkContext)
+      val before = jobs.get
+      f
+      SpecBus.drain(spark.sparkContext)
+      jobs.get - before
+    }
+    val docs = Tables.documents(spark, SfDir).select("doc_id", "text")
+    val embs = Tables.embeddings(spark, SfDir).select("vec_id", "embedding")
+    val d = Files.createTempDirectory("index_jobs").toString
+    SearchIndex.build(docs, embs, d)
+    val vDocs = Seq((910001L, "qqalpha qqbeta qqalpha"),
+      (910002L, "qqbeta qqgamma")).toDF("doc_id", "text")
+    val vEmbs = constEmbs(910001L -> 0.1f, 910002L -> 0.2f)
+    val victims = Seq(910001L, 910002L).toDF("doc_id")
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val counts = Seq(
+        "update" -> jobsIn(SearchIndex.update(vDocs, vEmbs, d)),
+        "upsert" -> jobsIn(SearchIndex.upsert(spark, d, victims, vDocs, vEmbs)),
+        "bulkDelete" -> jobsIn(SearchIndex.bulkDelete(spark, d, victims)))
+      assert(counts === Seq("update" -> 17, "upsert" -> 34,
+        "bulkDelete" -> 27))
+    } finally spark.sparkContext.removeSparkListener(listener)
   }
 
   test("compact merges fragmented buckets; results and untouched bytes identical") {
@@ -780,6 +899,14 @@ class SearchIndexSpec extends SparkSpec {
     val stats = spark.read.parquet(s"$d/stats").head()
     assert(stats.getDouble(0) === 0.0) // n_docs
     assert(stats.getDouble(1) === 0.0) // avgdl: defined, not NaN/error
+    assert(SearchIndex.bm25(spark, d, "solo qqdoc").count() === 0)
+
+    // merging another emptied index in keeps it empty: no 0/0 either
+    val e = Files.createTempDirectory("index_empty_src").toString
+    SearchIndex.build(docs, embs, e)
+    SearchIndex.bulkDelete(spark, e, Seq(1L, 2L).toDF("doc_id"))
+    SearchIndex.merge(spark, e, d)
+    assert(spark.read.parquet(s"$d/stats").head().toSeq === Seq(0.0, 0.0, 0.0))
     assert(SearchIndex.bm25(spark, d, "solo qqdoc").count() === 0)
 
     // the emptied index accepts a fresh update and answers again

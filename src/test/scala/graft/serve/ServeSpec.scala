@@ -246,6 +246,50 @@ class ServeSpec extends SparkSpec {
     assert(c6 == 404)
   }
 
+  test("concurrent upserts of one file serialize; searches in flight wait, never fail") {
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    import scala.concurrent.duration._
+    val (_, uf) = get("/unique-filepath/serve_docs")
+    val hfp = obj(uf).arr("hashed_filepaths").get.collectFirst {
+      case JStr(s) if s.nonEmpty => s
+    }.get
+    val upsert = s"""{"index_name": "serve_conc", "table_name": "serve_docs",
+        "hashed_filepath": "$hfp"}"""
+    val (c0, b0) = postJson("/index/document", upsert)
+    assert(c0 == 200, s"first index failed: $b0")
+    val pages = arr(get(s"/document/serve_conc/$hfp")._2).size
+    val search = """{"index_name": "serve_conc",
+        "query_text": "page explains hello serving layer",
+        "size": 5, "min_score": 0.1}"""
+
+    // one thread per caller: two writers, two readers looping until the
+    // writers are done
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
+    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
+    try {
+      val writes = Future.sequence(
+        (1 to 2).map(_ => Future(postJson("/index/document", upsert))))
+      val reads = Future.sequence((1 to 2).map(_ => Future {
+        val out = Seq.newBuilder[(Int, JVal)]
+        do out += postJson("/search", search) while (!writes.isCompleted)
+        out.result()
+      }))
+      Await.result(writes, 10.minutes).foreach { case (c, b) =>
+        assert(c == 200, s"upsert failed: $b")
+      }
+      Await.result(reads, 10.minutes).flatten.foreach { case (c, b) =>
+        assert(c == 200, s"search failed: $b")
+        assert(obj(b).int("total_hits").get >= 1)
+      }
+    } finally pool.shutdown()
+
+    val dir = s"$base/indices/serve_conc"
+    assert(graft.index.SearchIndex.indexStats(spark, dir).head().getLong(0) ==
+      pages, "a page was double-counted")
+    assert(!Files.exists(Paths.get(dir, "__delete_stage")))
+    assert(delete("/indices/serve_conc")._1 == 200)
+  }
+
   test("error envelope: FastAPI-style detail objects") {
     val (c1, b1) = postJson("/search", """{"index_name": "nope"}""")
     assert(c1 == 400 && obj(b1).fields.contains("detail"))
