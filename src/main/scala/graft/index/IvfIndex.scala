@@ -1,7 +1,5 @@
 package graft.index
 
-import java.nio.file.Paths
-
 import org.apache.spark.ml.clustering.KMeans
 import org.apache.spark.ml.functions.array_to_vector
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -26,13 +24,15 @@ import graft.table.{CommitStore, LocalCommitStore}
   * Publication: the three tables (`ivf_vectors`, `centroids`,
   * `sq_stats`) are one consistent unit — assignments computed against
   * one set of centroids must never pair with another, or probeCells
-  * probes the wrong cells and recall silently degrades. They therefore
-  * live together in a VERSIONED directory (`v00000/`, `v00001/`, …)
-  * and the live version is named by a single `CURRENT` pointer file
-  * flipped atomically via [[CommitStore.putPointer]]. [[build]] and
-  * [[rebalance]] stage a complete new version before the flip; a crash
-  * mid-stage leaves the pointer on the old, fully consistent version
-  * (the half-written dir is an invisible, vacuumable orphan).
+  * probes the wrong cells and recall silently degrades. They are
+  * therefore one [[IndexDirs.Versioned]] unit: a versioned directory
+  * named by a single `CURRENT` pointer, with a one-cycle vacuum grace
+  * window. [[build]] and [[rebalance]] stage a complete new version
+  * before the flip; a crash mid-stage leaves the pointer on the old,
+  * fully consistent version (the half-written dir is an invisible,
+  * vacuumable orphan). [[update]], [[delete]] and [[compact]] change
+  * the live version in place through the staged cell swaps of
+  * [[IndexDirs]].
   */
 object IvfIndex {
 
@@ -41,70 +41,20 @@ object IvfIndex {
   private val sqCache =
     new java.util.concurrent.ConcurrentHashMap[String, (Array[Double], Array[Double])]()
 
-  private def pointer(indexDir: String) = Paths.get(indexDir, "CURRENT")
+  private val unit = IndexDirs.Versioned("IVF",
+    Seq("ivf_vectors", "centroids", "sq_stats"), Seq(centroidCache, sqCache))
 
   /** The live version's directory (all three tables live under it).
     * Public so tests/tools can inspect the physical layout. */
   def currentDir(indexDir: String,
-      store: CommitStore = LocalCommitStore): String = {
-    val v = store.readPointer(pointer(indexDir)).getOrElse(
-      throw new IllegalStateException(
-        s"no IVF index at $indexDir (missing CURRENT pointer)"))
-    s"$indexDir/$v"
-  }
+      store: CommitStore = LocalCommitStore): String =
+    unit.currentDir(indexDir, store)
 
-  private def nextVersion(indexDir: String, store: CommitStore): String = {
-    val n = store.readPointer(pointer(indexDir))
-      .map(_.stripPrefix("v").toInt + 1).getOrElse(0)
-    f"v$n%05d"
-  }
-
-  /** Stage all three tables under a fresh version dir, then flip the
-    * pointer (the ONE atomic publish). The superseded version is NOT
-    * deleted here: an in-flight query (or another session's memoized
-    * plan) may still be resolving file paths under it, and an immediate
-    * delete would kill it mid-scan with FileNotFoundException. Instead
-    * [[vacuum]] runs with `keep = 1` — the previous version survives
-    * one full publish cycle (the Iceberg/Delta shape: vacuum is
-    * separate from commit), so storage is bounded at ≤2 versions while
-    * readers get a grace window of an entire publish interval. */
-  private def publish(spark: SparkSession, indexDir: String, store: CommitStore)
-      (stage: String => Unit): Unit = {
-    val v = nextVersion(indexDir, store)
-    stage(s"$indexDir/$v")
-    store.putPointer(pointer(indexDir), v)
-    dropMetadataCaches(indexDir)
-    vacuum(spark, indexDir, keep = 1, store)
-  }
-
-  /** Delete unreachable versions, RETAINING the pointer target plus the
-    * `keep` newest superseded versions (grace window for in-flight
-    * readers). Returns the deleted version names. A crash mid-vacuum
-    * leaves inspectable garbage, never serving state. */
+  /** Delete unreachable versions, retaining the pointer target plus the
+    * `keep` newest superseded versions. Returns the deleted names. */
   def vacuum(spark: SparkSession, indexDir: String, keep: Int = 1,
-      store: CommitStore = LocalCommitStore): Seq[String] = {
-    val current = store.readPointer(pointer(indexDir)).getOrElse(return Nil)
-    val root = Paths.get(indexDir)
-    if (!java.nio.file.Files.isDirectory(root)) return Nil
-    val s = java.nio.file.Files.list(root)
-    val versions = try {
-      val b = Seq.newBuilder[String]
-      val it = s.iterator()
-      while (it.hasNext) {
-        val n = it.next().getFileName.toString
-        if (n.startsWith("v") && n.drop(1).forall(_.isDigit) && n != current)
-          b += n
-      }
-      b.result()
-    } finally s.close()
-    val victims = versions.sorted.dropRight(math.max(0, keep))
-    victims.foreach { old =>
-      Seq("ivf_vectors", "centroids", "sq_stats").foreach(t =>
-        graft.Tables.invalidate(spark, s"$indexDir/$old/$t"))
-      store.deleteRecursive(Paths.get(s"$indexDir/$old"))
-    }
-    victims
-  }
+      store: CommitStore = LocalCommitStore): Seq[String] =
+    unit.vacuum(spark, indexDir, keep, store)
 
   def build(embs: DataFrame, indexDir: String, idCol: String = "vec_id",
       vecCol: String = "embedding", nCells: Int = 16,
@@ -118,7 +68,7 @@ object IvfIndex {
     val model = new KMeans().setK(nCells).setSeed(seed)
       .setFeaturesCol("features").setPredictionCol("ivf_cell")
       .fit(withVec)
-    publish(spark, indexDir, store) { vDir =>
+    unit.publish(spark, indexDir, store) { vDir =>
       model.transform(withVec)
         .select(col("doc_id"), col("embedding"), col("ivf_cell"))
         .repartition(col("ivf_cell"))
@@ -165,7 +115,8 @@ object IvfIndex {
       zip_with(col(vecCol).cast("array<double>"), col("centroid"),
         (a, b) => (a - b) * (a - b)),
       lit(0.0), (acc, x) => acc + x)
-    newEmbs.select(col(idCol).as("doc_id"), col(vecCol).as("embedding"))
+    val assigned = newEmbs
+      .select(col(idCol).as("doc_id"), col(vecCol).as("embedding"))
       .crossJoin(broadcast(cents))
       .withColumn("dist", dist)
       .groupBy("doc_id")
@@ -173,9 +124,7 @@ object IvfIndex {
         min_by(col("cell"), struct(col("dist"), col("cell"))).as("ivf_cell"),
         first(col("embedding")).as("embedding"))
       .select(col("doc_id"), col("embedding"), col("ivf_cell"))
-      .repartition(col("ivf_cell"))
-      .write.mode("append").partitionBy("ivf_cell")
-      .parquet(s"$vDir/ivf_vectors")
+    IndexDirs.appendBuckets(assigned, s"$vDir/ivf_vectors", "ivf_cell", store)
     graft.Tables.invalidate(spark, s"$vDir/ivf_vectors")
   }
 
@@ -186,52 +135,9 @@ object IvfIndex {
     * their exact bytes, results are bit-identical rows. Returns
     * (filesBefore, filesAfter) over the rewritten cells. */
   def compact(spark: SparkSession, indexDir: String,
-      store: CommitStore = LocalCommitStore): (Long, Long) = {
-    import java.nio.file.Files
-    val vDir = currentDir(indexDir, store)
-    val root = Paths.get(s"$vDir/ivf_vectors")
-    if (!Files.isDirectory(root)) return (0L, 0L)
-    def filesIn(p: java.nio.file.Path): Int = {
-      val s = Files.list(p)
-      try {
-        var n = 0
-        val it = s.iterator()
-        while (it.hasNext)
-          if (it.next().toString.endsWith(".parquet")) n += 1
-        n
-      } finally s.close()
-    }
-    val ls = Files.list(root)
-    var before = 0L
-    val fragmented = try {
-      val b = Seq.newBuilder[Int]
-      val it = ls.iterator()
-      while (it.hasNext) {
-        val p = it.next()
-        val name = p.getFileName.toString
-        if (name.startsWith("ivf_cell=") && filesIn(p) > 1) {
-          b += name.stripPrefix("ivf_cell=").toInt
-          before += filesIn(p)
-        }
-      }
-      b.result()
-    } finally ls.close()
-    if (fragmented.isEmpty) return (0L, 0L)
-    val tmp = s"$vDir/ivf_vectors__tmp"
-    graft.Tables.loadPath(spark, s"$vDir/ivf_vectors")
-      .filter(col("ivf_cell").isin(fragmented: _*))
-      .repartition(col("ivf_cell"))
-      .write.mode("overwrite").partitionBy("ivf_cell").parquet(tmp)
-    fragmented.foreach { c =>
-      store.swapDir(Paths.get(tmp, s"ivf_cell=$c"),
-        Paths.get(s"$vDir/ivf_vectors", s"ivf_cell=$c"))
-    }
-    store.deleteRecursive(Paths.get(tmp))
-    graft.Tables.invalidate(spark, s"$vDir/ivf_vectors")
-    var after = 0L
-    fragmented.foreach(c => after += filesIn(root.resolve(s"ivf_cell=$c")))
-    (before, after)
-  }
+      store: CommitStore = LocalCommitStore): (Long, Long) =
+    IndexDirs.compactBuckets(spark,
+      s"${currentDir(indexDir, store)}/ivf_vectors", "ivf_cell", store)
 
   /** Doc-level retraction (PII/takedown): rewrite ONLY the cells that
     * hold victims — an anti-filter per touched cell through a staged
@@ -241,28 +147,9 @@ object IvfIndex {
     * queries match brute force over the survivors and a victim can
     * never be returned (IvfIndexSpec). */
   def delete(spark: SparkSession, indexDir: String, ids: Seq[Long],
-      store: CommitStore = LocalCommitStore): Unit = {
-    import java.nio.file.Files
-    if (ids.isEmpty) return
-    val vDir = currentDir(indexDir, store)
-    val v = graft.Tables.loadPath(spark, s"$vDir/ivf_vectors")
-    val touched = v.filter(col("doc_id").isin(ids: _*))
-      .select("ivf_cell").distinct().collect().map(_.getInt(0)).toSeq
-    if (touched.isEmpty) return
-    val tmp = s"$vDir/ivf_vectors__tmp"
-    v.filter(col("ivf_cell").isin(touched: _*) &&
-        !col("doc_id").isin(ids: _*))
-      .repartition(col("ivf_cell"))
-      .write.mode("overwrite").partitionBy("ivf_cell").parquet(tmp)
-    touched.foreach { c =>
-      val staged = Paths.get(tmp, s"ivf_cell=$c")
-      val live   = Paths.get(s"$vDir/ivf_vectors", s"ivf_cell=$c")
-      if (Files.exists(staged)) store.swapDir(staged, live)
-      else store.deleteRecursive(live)
-    }
-    store.deleteRecursive(Paths.get(tmp))
-    graft.Tables.invalidate(spark, s"$vDir/ivf_vectors")
-  }
+      store: CommitStore = LocalCommitStore): Unit =
+    if (ids.nonEmpty) IndexDirs.retract(spark,
+      s"${currentDir(indexDir, store)}/ivf_vectors", "ivf_cell", ids, store)
 
   /** Cell-population imbalance: max(|cell|) / mean(|cell|), over the
     * FULL cell grid (an empty cell counts as 0 — assignment never fills
@@ -308,7 +195,7 @@ object IvfIndex {
     // stage everything into the next version before the flip: reads of
     // the live dirs feed the staged writes, so the live version must
     // stay in place (and keeps serving) until the pointer moves
-    publish(spark, indexDir, store) { vDir =>
+    unit.publish(spark, indexDir, store) { vDir =>
       model.transform(current)
         .select(col("doc_id"), col("embedding"), col("ivf_cell"))
         .repartition(col("ivf_cell"))
@@ -330,20 +217,14 @@ object IvfIndex {
     true
   }
 
-  /** Drop the per-session driver-side metadata caches for `indexDir`
-    * (centroids + SQ codebook) after a mutation. */
-  private def dropMetadataCaches(indexDir: String): Unit = {
-    centroidCache.keySet.removeIf(_.endsWith("|" + indexDir))
-    sqCache.keySet.removeIf(_.endsWith("|" + indexDir))
-  }
-
-  /** Driver-side nProbe nearest cells (centroid table = index metadata,
-    * nCells rows, collected once per session+index). */
-  private def probeCells(spark: SparkSession, indexDir: String,
-      queryVec: Array[Float], nProbe: Int, store: CommitStore): Seq[Int] = {
+  /** Driver-side nProbe nearest cells of the version at `vDir`
+    * (centroid table = index metadata, nCells rows, collected once per
+    * version and session). */
+  private def probeCells(spark: SparkSession, vDir: String,
+      queryVec: Array[Float], nProbe: Int): Seq[Int] = {
     val centroids = centroidCache.computeIfAbsent(
-      org.apache.spark.sql.graftext.SessionUtils.uuid(spark) + "|" + indexDir,
-      _ => graft.Tables.loadPath(spark, s"${currentDir(indexDir, store)}/centroids")
+      vDir + "|" + org.apache.spark.sql.graftext.SessionUtils.uuid(spark),
+      _ => graft.Tables.loadPath(spark, s"$vDir/centroids")
         .collect().map(r => r.getInt(0) ->
           r.getSeq[Double](1).toArray).toMap)
     val q = queryVec.map(_.toDouble)
@@ -360,8 +241,9 @@ object IvfIndex {
   def knn(spark: SparkSession, indexDir: String, queryVec: Array[Float],
       k: Int, nProbe: Int = 2,
       store: CommitStore = LocalCommitStore): DataFrame = {
-    val cells = probeCells(spark, indexDir, queryVec, nProbe, store)
-    graft.Tables.loadPath(spark, s"${currentDir(indexDir, store)}/ivf_vectors")
+    val vDir = currentDir(indexDir, store)
+    val cells = probeCells(spark, vDir, queryVec, nProbe)
+    graft.Tables.loadPath(spark, s"$vDir/ivf_vectors")
       .filter(col("ivf_cell").isin(cells: _*))
       .select(col("doc_id"),
         round(VectorFunctions.cosine(col("embedding"), typedLit(queryVec)), 6)
@@ -386,9 +268,10 @@ object IvfIndex {
       queryVec: Array[Float], k: Int, allowedIds: DataFrame,
       nProbe: Int = 2,
       store: CommitStore = LocalCommitStore): DataFrame = {
-    val cells = probeCells(spark, indexDir, queryVec, nProbe, store)
+    val vDir = currentDir(indexDir, store)
+    val cells = probeCells(spark, vDir, queryVec, nProbe)
     val allow = allowedIds.toDF("doc_id")
-    graft.Tables.loadPath(spark, s"${currentDir(indexDir, store)}/ivf_vectors")
+    graft.Tables.loadPath(spark, s"$vDir/ivf_vectors")
       .filter(col("ivf_cell").isin(cells: _*))
       .join(broadcast(allow), Seq("doc_id"), "left_semi")
       .select(col("doc_id"),
@@ -411,11 +294,12 @@ object IvfIndex {
       queries: Seq[(Long, Array[Float])], k: Int, nProbe: Int = 2,
       store: CommitStore = LocalCommitStore): DataFrame = {
     import spark.implicits._
+    val vDir = currentDir(indexDir, store)
     val probeRows = queries.flatMap { case (qid, v) =>
-      probeCells(spark, indexDir, v, nProbe, store).map(c => (qid, c))
+      probeCells(spark, vDir, v, nProbe).map(c => (qid, c))
     }
     val cells = probeRows.map(_._2).distinct
-    graft.Tables.loadPath(spark, s"${currentDir(indexDir, store)}/ivf_vectors")
+    graft.Tables.loadPath(spark, s"$vDir/ivf_vectors")
       .filter(col("ivf_cell").isin(cells: _*))
       .join(broadcast(probeRows.toDF("query_id", "ivf_cell")), "ivf_cell")
       .join(broadcast(queries.map { case (qid, v) => (qid, v.toSeq) }
@@ -442,18 +326,16 @@ object IvfIndex {
       queryVec: Array[Float], k: Int, nProbe: Int = 2,
       numCandidates: Int = 50,
       store: CommitStore = LocalCommitStore): DataFrame = {
-    val cells = probeCells(spark, indexDir, queryVec, nProbe, store)
-    val sq = sqCache.computeIfAbsent(
-      org.apache.spark.sql.graftext.SessionUtils.uuid(spark) + "|" + indexDir,
+    val vDir = currentDir(indexDir, store)
+    val cells = probeCells(spark, vDir, queryVec, nProbe)
+    val (mn, mx) = sqCache.computeIfAbsent(
+      vDir + "|" + org.apache.spark.sql.graftext.SessionUtils.uuid(spark),
       _ => {
-        val r = graft.Tables.loadPath(
-          spark, s"${currentDir(indexDir, store)}/sq_stats").head()
+        val r = graft.Tables.loadPath(spark, s"$vDir/sq_stats").head()
         (r.getSeq[Double](0).toArray, r.getSeq[Double](1).toArray)
       })
-    val (mn, mx) = sq
     val qInt = graft.search.VectorSearch.quantizeVec(queryVec, mn, mx)
-    val cands = graft.Tables.loadPath(
-        spark, s"${currentDir(indexDir, store)}/ivf_vectors")
+    val cands = graft.Tables.loadPath(spark, s"$vDir/ivf_vectors")
       .filter(col("ivf_cell").isin(cells: _*))
       .select(col("doc_id"), col("embedding"),
         graft.search.VectorSearch.quantizedScore(

@@ -1,7 +1,5 @@
 package graft.index
 
-import java.nio.file.Paths
-
 import org.apache.spark.ml.clustering.KMeans
 import org.apache.spark.ml.functions.array_to_vector
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -32,9 +30,10 @@ import graft.table.{CommitStore, LocalCommitStore}
   *
   * All three tables (vectors, centroids, codebooks) are ONE consistent
   * unit — codes decode only against the codebooks and centroids they
-  * were encoded with — so they live in one versioned dir flipped by a
-  * single CURRENT pointer with a one-cycle vacuum grace window, the
-  * same publish protocol as [[IvfIndex]]/[[PqIndex]].
+  * were encoded with — so they are one [[IndexDirs.Versioned]] unit: a
+  * versioned dir flipped by a single CURRENT pointer with a one-cycle
+  * vacuum grace window. In-place maintenance ([[update]], [[delete]],
+  * [[compact]]) goes through the staged cell swaps of [[IndexDirs]].
   */
 object IvfPqIndex {
 
@@ -42,6 +41,9 @@ object IvfPqIndex {
     String, (Map[Int, Array[Double]], Array[Array[Array[Double]]])]()
   private val countCache =
     new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
+
+  private val unit = IndexDirs.Versioned("IVF-PQ",
+    Seq("vectors", "centroids", "codebooks"), Seq(metaCache, countCache))
 
   /** Indexed-vector count of the CURRENT version (cached per version
     * dir; invalidated by the in-place mutators). */
@@ -60,59 +62,17 @@ object IvfPqIndex {
     if (numCandidates > 0) numCandidates
     else PqIndex.scaledCandidates(indexedCount(spark, indexDir, store), k)
 
-  private def pointer(indexDir: String) = Paths.get(indexDir, "CURRENT")
-
   /** The live version's directory (all three tables live under it). */
   def currentDir(indexDir: String,
-      store: CommitStore = LocalCommitStore): String = {
-    val v = store.readPointer(pointer(indexDir)).getOrElse(
-      throw new IllegalStateException(
-        s"no IVF-PQ index at $indexDir (missing CURRENT pointer)"))
-    s"$indexDir/$v"
-  }
-
-  private def nextVersion(indexDir: String, store: CommitStore): String = {
-    val n = store.readPointer(pointer(indexDir))
-      .map(_.stripPrefix("v").toInt + 1).getOrElse(0)
-    f"v$n%05d"
-  }
-
-  private def publish(spark: SparkSession, indexDir: String,
-      store: CommitStore)(stage: String => Unit): Unit = {
-    val v = nextVersion(indexDir, store)
-    stage(s"$indexDir/$v")
-    store.putPointer(pointer(indexDir), v)
-    metaCache.keySet.removeIf(_.startsWith(indexDir + "/"))
-    vacuum(spark, indexDir, keep = 1, store)
-  }
+      store: CommitStore = LocalCommitStore): String =
+    unit.currentDir(indexDir, store)
 
   /** Delete unreachable versions, retaining the pointer target plus the
     * `keep` newest superseded versions (grace window for in-flight
     * readers of the old pointer). */
   def vacuum(spark: SparkSession, indexDir: String, keep: Int = 1,
-      store: CommitStore = LocalCommitStore): Seq[String] = {
-    val current = store.readPointer(pointer(indexDir)).getOrElse(return Nil)
-    val root = Paths.get(indexDir)
-    if (!java.nio.file.Files.isDirectory(root)) return Nil
-    val s = java.nio.file.Files.list(root)
-    val versions = try {
-      val b = Seq.newBuilder[String]
-      val it = s.iterator()
-      while (it.hasNext) {
-        val n = it.next().getFileName.toString
-        if (n.startsWith("v") && n.drop(1).forall(_.isDigit) && n != current)
-          b += n
-      }
-      b.result()
-    } finally s.close()
-    val victims = versions.sorted.dropRight(math.max(0, keep))
-    victims.foreach { old =>
-      Seq("vectors", "centroids", "codebooks").foreach(t =>
-        graft.Tables.invalidate(spark, s"$indexDir/$old/$t"))
-      store.deleteRecursive(Paths.get(s"$indexDir/$old"))
-    }
-    victims
-  }
+      store: CommitStore = LocalCommitStore): Seq[String] =
+    unit.vacuum(spark, indexDir, keep, store)
 
   /** The per-row residual (vector − its cell centroid), as a double
     * array column, given a broadcast (cell, centroid) relation already
@@ -159,7 +119,7 @@ object IvfPqIndex {
       val codes = PqIndex.assignCodes(
         subs.select("doc_id", "sub_id", "subvec"), codebooks)
 
-      publish(spark, indexDir, store) { vDir =>
+      unit.publish(spark, indexDir, store) { vDir =>
         codes
           .join(assigned, "doc_id")
           .select(col("doc_id"), col("embedding"), col("codes"),
@@ -217,33 +177,13 @@ object IvfPqIndex {
     val subs = assigned.select(col("doc_id"), col("ivf_cell"),
       posexplode(PqIndex.subVectors(residual("embedding"), m, subDim))
         .as(Seq("sub_id", "subvec")))
-    PqIndex.assignCodes(subs.select("doc_id", "sub_id", "subvec"), codebooks)
-      .join(assigned.select("doc_id", "embedding", "ivf_cell"), "doc_id")
-      .select(col("doc_id"), col("embedding"), col("codes"), col("ivf_cell"))
-      .repartition(col("ivf_cell"))
-      .write.mode("append").partitionBy("ivf_cell")
-      .parquet(s"$vDir/vectors")
+    IndexDirs.appendBuckets(
+      PqIndex.assignCodes(subs.select("doc_id", "sub_id", "subvec"), codebooks)
+        .join(assigned.select("doc_id", "embedding", "ivf_cell"), "doc_id")
+        .select(col("doc_id"), col("embedding"), col("codes"), col("ivf_cell")),
+      s"$vDir/vectors", "ivf_cell", store)
     graft.Tables.invalidate(spark, s"$vDir/vectors")
     countCache.remove(vDir)
-  }
-
-  /** Stage `df` (rows for `cells` only) and swap each cell dir into the
-    * live table — a cell with no staged rows is deleted (it lost every
-    * row). The [[graft.table.CommitStore]] swap keeps readers
-    * consistent per cell and crash-healable. */
-  private def swapCells(df: DataFrame, vectorsDir: String,
-      cells: Seq[Int], store: CommitStore): Unit = {
-    import java.nio.file.Files
-    val tmp = vectorsDir + "__tmp"
-    df.repartition(col("ivf_cell"))
-      .write.mode("overwrite").partitionBy("ivf_cell").parquet(tmp)
-    cells.foreach { c =>
-      val staged = Paths.get(tmp, s"ivf_cell=$c")
-      val live   = Paths.get(vectorsDir, s"ivf_cell=$c")
-      if (Files.exists(staged)) store.swapDir(staged, live)
-      else store.deleteRecursive(live)
-    }
-    store.deleteRecursive(Paths.get(tmp))
   }
 
   /** Doc-level retraction (PII/takedown): rewrite ONLY the cells that
@@ -257,20 +197,12 @@ object IvfPqIndex {
     * Touched-cell discovery is one pruned-column scan; the rewrite
     * touches |touched cells| data. */
   def delete(spark: SparkSession, indexDir: String, ids: Seq[Long],
-      store: CommitStore = LocalCommitStore): Unit = {
-    if (ids.isEmpty) return
-    val vDir = currentDir(indexDir, store)
-    val v = graft.Tables.loadPath(spark, s"$vDir/vectors")
-    val touched = v.filter(col("doc_id").isin(ids: _*))
-      .select("ivf_cell").distinct().collect().map(_.getInt(0)).toSeq
-    if (touched.isEmpty) return
-    swapCells(
-      v.filter(col("ivf_cell").isin(touched: _*) &&
-        !col("doc_id").isin(ids: _*)),
-      s"$vDir/vectors", touched, store)
-    graft.Tables.invalidate(spark, s"$vDir/vectors")
-    countCache.remove(vDir)
-  }
+      store: CommitStore = LocalCommitStore): Unit =
+    if (ids.nonEmpty) {
+      val vDir = currentDir(indexDir, store)
+      IndexDirs.retract(spark, s"$vDir/vectors", "ivf_cell", ids, store)
+      countCache.remove(vDir)
+    }
 
   /** Collapse the small files [[update]] appends per touched cell per
     * micro-batch back to one file per cell (same shape as
@@ -278,46 +210,9 @@ object IvfPqIndex {
     * untouched cells byte-identical. Returns (filesBefore, filesAfter)
     * over rewritten cells. */
   def compact(spark: SparkSession, indexDir: String,
-      store: CommitStore = LocalCommitStore): (Long, Long) = {
-    import java.nio.file.Files
-    val vDir = currentDir(indexDir, store)
-    val root = Paths.get(s"$vDir/vectors")
-    if (!Files.isDirectory(root)) return (0L, 0L)
-    def filesIn(p: java.nio.file.Path): Int = {
-      val s = Files.list(p)
-      try {
-        var n = 0
-        val it = s.iterator()
-        while (it.hasNext)
-          if (it.next().toString.endsWith(".parquet")) n += 1
-        n
-      } finally s.close()
-    }
-    val ls = Files.list(root)
-    var before = 0L
-    val fragmented = try {
-      val b = Seq.newBuilder[Int]
-      val it = ls.iterator()
-      while (it.hasNext) {
-        val p = it.next()
-        val name = p.getFileName.toString
-        if (name.startsWith("ivf_cell=") && filesIn(p) > 1) {
-          b += name.stripPrefix("ivf_cell=").toInt
-          before += filesIn(p)
-        }
-      }
-      b.result()
-    } finally ls.close()
-    if (fragmented.isEmpty) return (0L, 0L)
-    swapCells(
-      graft.Tables.loadPath(spark, s"$vDir/vectors")
-        .filter(col("ivf_cell").isin(fragmented: _*)),
-      s"$vDir/vectors", fragmented, store)
-    graft.Tables.invalidate(spark, s"$vDir/vectors")
-    var after = 0L
-    fragmented.foreach(c => after += filesIn(root.resolve(s"ivf_cell=$c")))
-    (before, after)
-  }
+      store: CommitStore = LocalCommitStore): (Long, Long) =
+    IndexDirs.compactBuckets(spark,
+      s"${currentDir(indexDir, store)}/vectors", "ivf_cell", store)
 
   /** Centroids + codebooks (index metadata, cached per version dir). */
   private def metaOf(spark: SparkSession, vDir: String)

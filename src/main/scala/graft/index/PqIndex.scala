@@ -1,7 +1,5 @@
 package graft.index
 
-import java.nio.file.Paths
-
 import org.apache.spark.ml.clustering.KMeans
 import org.apache.spark.ml.functions.array_to_vector
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -29,10 +27,10 @@ import graft.table.{CommitStore, LocalCommitStore}
   * bounded by the knob, never a second corpus scan.
   *
   * The codebook/codes pair is one consistent unit (codes are meaningless
-  * against another training's centroids), so both tables live in one
-  * versioned dir flipped by a single `CURRENT` pointer, exactly like
-  * [[IvfIndex]]'s publish protocol; vacuum retains the superseded
-  * version one publish cycle.
+  * against another training's centroids), so both tables are one
+  * [[IndexDirs.Versioned]] unit: a versioned dir flipped by a single
+  * `CURRENT` pointer; vacuum retains the superseded version one publish
+  * cycle.
   *
   * 100 TB notes: codebook TRAINING (m k-means fits) runs over the build
   * corpus here for determinism; at scale you fit on a driver-side sample
@@ -74,62 +72,19 @@ object PqIndex {
       _ => graft.Tables.loadPath(spark, s"$vDir/pq_vectors").count())
   }
 
-  private def pointer(indexDir: String) = Paths.get(indexDir, "CURRENT")
+  private val unit = IndexDirs.Versioned("PQ",
+    Seq("pq_vectors", "pq_codebooks"), Seq(codebookCache, countCache))
 
   /** The live version's directory (both tables live under it). */
   def currentDir(indexDir: String,
-      store: CommitStore = LocalCommitStore): String = {
-    val v = store.readPointer(pointer(indexDir)).getOrElse(
-      throw new IllegalStateException(
-        s"no PQ index at $indexDir (missing CURRENT pointer)"))
-    s"$indexDir/$v"
-  }
-
-  private def nextVersion(indexDir: String, store: CommitStore): String = {
-    val n = store.readPointer(pointer(indexDir))
-      .map(_.stripPrefix("v").toInt + 1).getOrElse(0)
-    f"v$n%05d"
-  }
-
-  /** Stage both tables under a fresh version dir, flip the pointer,
-    * then vacuum with a one-publish-cycle grace window (same contract
-    * as [[IvfIndex]]: an in-flight reader of the superseded version
-    * never loses its files mid-scan). */
-  private def publish(spark: SparkSession, indexDir: String,
-      store: CommitStore)(stage: String => Unit): Unit = {
-    val v = nextVersion(indexDir, store)
-    stage(s"$indexDir/$v")
-    store.putPointer(pointer(indexDir), v)
-    codebookCache.keySet.removeIf(_.startsWith(indexDir + "|"))
-    vacuum(spark, indexDir, keep = 1, store)
-  }
+      store: CommitStore = LocalCommitStore): String =
+    unit.currentDir(indexDir, store)
 
   /** Delete unreachable versions, retaining the pointer target plus the
     * `keep` newest superseded versions. Returns deleted names. */
   def vacuum(spark: SparkSession, indexDir: String, keep: Int = 1,
-      store: CommitStore = LocalCommitStore): Seq[String] = {
-    val current = store.readPointer(pointer(indexDir)).getOrElse(return Nil)
-    val root = Paths.get(indexDir)
-    if (!java.nio.file.Files.isDirectory(root)) return Nil
-    val s = java.nio.file.Files.list(root)
-    val versions = try {
-      val b = Seq.newBuilder[String]
-      val it = s.iterator()
-      while (it.hasNext) {
-        val n = it.next().getFileName.toString
-        if (n.startsWith("v") && n.drop(1).forall(_.isDigit) && n != current)
-          b += n
-      }
-      b.result()
-    } finally s.close()
-    val victims = versions.sorted.dropRight(math.max(0, keep))
-    victims.foreach { old =>
-      Seq("pq_vectors", "pq_codebooks").foreach(t =>
-        graft.Tables.invalidate(spark, s"$indexDir/$old/$t"))
-      store.deleteRecursive(Paths.get(s"$indexDir/$old"))
-    }
-    victims
-  }
+      store: CommitStore = LocalCommitStore): Seq[String] =
+    unit.vacuum(spark, indexDir, keep, store)
 
   /** Per-row array of the m `dim/m`-dim subvectors of `vec`.
     * (private[index]: shared with [[IvfPqIndex]].) */
@@ -176,7 +131,7 @@ object PqIndex {
 
       val codes = assignCodes(subs, codebooks)
 
-      publish(spark, indexDir, store) { vDir =>
+      unit.publish(spark, indexDir, store) { vDir =>
         codes
           .join(embs.select(col(idCol).as("doc_id"),
             col(vecCol).as("embedding")), "doc_id")
@@ -236,7 +191,7 @@ object PqIndex {
   }
 
   /** Doc-level retraction (PII/takedown): anti-filter rewrite of the
-    * codes table through one staged [[CommitStore.swapDir]] (pq_vectors
+    * codes table through one staged [[IndexDirs.writeSwap]] (pq_vectors
     * is not cell-partitioned, so the unit of swap is the table — the
     * cost of the flat-PQ layout; [[IvfPqIndex.delete]] is the
     * cell-pruned variant). Codebooks are frozen training metadata, so
@@ -248,11 +203,8 @@ object PqIndex {
       store: CommitStore = LocalCommitStore): Unit = {
     if (ids.isEmpty) return
     val vDir = currentDir(indexDir, store)
-    val tmp = s"$vDir/pq_vectors__tmp"
-    graft.Tables.loadPath(spark, s"$vDir/pq_vectors")
-      .filter(!col("doc_id").isin(ids: _*))
-      .write.mode("overwrite").parquet(tmp)
-    store.swapDir(Paths.get(tmp), Paths.get(s"$vDir/pq_vectors"))
+    IndexDirs.writeSwap(graft.Tables.loadPath(spark, s"$vDir/pq_vectors")
+      .filter(!col("doc_id").isin(ids: _*)), s"$vDir/pq_vectors", store)
     graft.Tables.invalidate(spark, s"$vDir/pq_vectors")
     countCache.remove(vDir)
   }

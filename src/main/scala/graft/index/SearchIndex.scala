@@ -182,53 +182,44 @@ object SearchIndex {
   /** The one mutation behind [[update]], [[upsert]], [[bulkDelete]] and
     * [[merge]]: retract the doc ids of `retract`, fold `delta` in.
     *
-    *  1. Stage the victims: their postings are written to
-    *     `__delete_stage` before any swap. A cached lineage is not
-    *     durable — after the postings swap it would re-read the
-    *     rewritten files and find no victims — so docfreq and stats read
-    *     the decrements from the staged copy, and the driver keeps each
-    *     side's [[Side]] scalars from before the first swap.
-    *  2. Postings, positions, vectors: each bucket holding a victim is
+    *  1. Summarize both sides: the victims' postings (a semi-join of the
+    *     live postings) and the delta's, each read once into a [[Side]].
+    *  2. Docfreq: one signed merge over the touched term buckets. A
+    *     postings row is one (doc, term) pair, so `live + inc − dec` is a
+    *     sum of the live df and ±1 per delta/victim row; `df > 0` keeps
+    *     a term whose last doc left out of the dictionary, as a rebuild
+    *     would have it.
+    *  3. Stats: one swap, `n_docs`/`sum_dl` plus the delta's minus the
+    *     victims'. dl and tf values are integer-valued doubles, so the
+    *     sums are exact and `avgdl` is bit-identical to a rebuild.
+    *  4. Postings, positions, vectors: each bucket holding a victim is
     *     rewritten once, survivors plus the delta's rows for it; the
     *     delta's rows for every other bucket are appended. A doc's
     *     positions sit in the same term buckets as its postings (both
     *     come from [[TextFunctions.tokens]]), so one touched list serves
     *     both tables.
-    *  3. Docfreq: one signed merge over the touched term buckets. A
-    *     postings row is one (doc, term) pair, so `live + inc − dec` is a
-    *     sum of the live df and ±1 per delta/victim row; `df > 0` keeps
-    *     a term whose last doc left out of the dictionary, as a rebuild
-    *     would have it.
-    *  4. Stats: one swap, `n_docs`/`sum_dl` plus the delta's minus the
-    *     victims'. dl and tf values are integer-valued doubles, so the
-    *     sums are exact and `avgdl` is bit-identical to a rebuild.
     *
-    * Every rewrite goes through the staged bucket swap of
-    * [[writeSwapBuckets]]: buckets neither side touches keep their exact
-    * bytes. The driver holds only touched-bucket lists, bounded by the
-    * bucket space, never by |ids| or |delta|. */
+    * Every read of the victims' postings runs before the postings swap,
+    * which removes them: a victim lineage evaluated after it would find
+    * no rows. Every rewrite goes through the staged bucket swap of
+    * [[IndexDirs.swapBuckets]]: buckets neither side touches keep their
+    * exact bytes. The driver holds only touched-bucket lists, bounded by
+    * the bucket space, never by |ids| or |delta|. */
   private def mutate(spark: SparkSession, indexDir: String,
       retract: Option[DataFrame], delta: Option[Delta],
       store: graft.table.CommitStore): Unit = {
-    val stage = java.nio.file.Paths.get(indexDir, "__delete_stage")
     // caller data, not index lineage: stays valid across the swaps
     val ids = retract.map(r =>
       r.select(col(r.columns.head).cast("long").as("doc_id")))
     val inc = delta.map(_.postings.persist())
     try {
-      val dec = ids.map { i =>
-        val victims = cachedTable(spark, indexDir, "postings")
-          .join(i, Seq("doc_id"), "left_semi")
-          .select("term_bucket", "term", "doc_id", "tf")
-        victims.write.mode("overwrite").parquet(s"$stage/victims")
-        spark.read.schema(victims.schema).parquet(s"$stage/victims")
-      }
-      val (decSide, incSide) = (side(dec), side(inc))
+      val victims = ids.map(cachedTable(spark, indexDir, "postings")
+        .join(_, Seq("doc_id"), "left_semi")
+        .select("term_bucket", "term", "doc_id", "tf"))
+      val (decSide, incSide) = (side(victims), side(inc))
+      // a retraction that hits no indexed doc adds nothing to the merge
+      val dec = victims.filter(_ => decSide.nDocs > 0)
       val retracted = decSide.buckets
-      foldBuckets(spark, indexDir, "postings", "term_bucket", ids,
-        retracted, Some(incSide.buckets), inc, store)
-      foldBuckets(spark, indexDir, "positions", "term_bucket", ids,
-        retracted, Some(incSide.buckets), delta.map(_.positions), store)
 
       val touched = (retracted ++ incSide.buckets).distinct.sorted
       if (touched.nonEmpty) {
@@ -241,37 +232,41 @@ object SearchIndex {
           .reduce(_ unionByName _)
           .groupBy("term_bucket", "term").agg(sum("df").as("df"))
           .filter(col("df") > 0)
-        writeSwapBuckets(mergedDf.repartition(col("term_bucket")),
-          s"$indexDir/docfreq", "term_bucket", touched, store)
+        IndexDirs.swapBuckets(mergedDf, s"$indexDir/docfreq", "term_bucket",
+          touched, store)
 
         val n = col("n_docs") + (incSide.nDocs - decSide.nDocs)
         val sumDl = col("sum_dl") + (incSide.sumDl - decSide.sumDl)
         // retracting the LAST doc sends n_docs to 0: avgdl is 0/0,
         // defined as 0.0 (ANSI would fail the write)
-        writeSwap(cachedTable(spark, indexDir, "stats").select(n.as("n_docs"),
-            coalesce(try_divide(sumDl, n), lit(0.0)).as("avgdl"),
-            sumDl.as("sum_dl")),
-          s"$indexDir/stats", partitionCol = None, store)
+        IndexDirs.writeSwap(cachedTable(spark, indexDir, "stats")
+            .select(n.as("n_docs"),
+              coalesce(try_divide(sumDl, n), lit(0.0)).as("avgdl"),
+              sumDl.as("sum_dl")),
+          s"$indexDir/stats", store)
       }
 
-      val retractedV = ids.fold(Seq.empty[Long])(i => bucketsOf(
+      foldBuckets(spark, indexDir, "postings", "term_bucket", ids,
+        retracted, Some(incSide.buckets), inc, store)
+      foldBuckets(spark, indexDir, "positions", "term_bucket", ids,
+        retracted, Some(incSide.buckets), delta.map(_.positions), store)
+      val retractedV = ids.fold(Seq.empty[Long])(i => IndexDirs.bucketsOf(
         cachedTable(spark, indexDir, "vectors").join(i, Seq("doc_id"), "left_semi"),
         "lsh_bucket"))
       // the delta's vector buckets are only worth a job when a rewrite
       // may already hold all of them
       val addedV =
         if (retractedV.isEmpty) None
-        else delta.map(d => bucketsOf(d.vectors, "lsh_bucket"))
+        else delta.map(d => IndexDirs.bucketsOf(d.vectors, "lsh_bucket"))
       foldBuckets(spark, indexDir, "vectors", "lsh_bucket", ids,
         retractedV, addedV, delta.map(_.vectors), store)
     } finally {
       inc.foreach(_.unpersist())
-      if (ids.isDefined) store.deleteRecursive(stage)
       invalidateAll(spark, indexDir)
     }
   }
 
-  /** One side of a mutation (the staged victims or the delta's postings),
+  /** One side of a mutation (the victims' or the delta's postings),
     * read once before any swap: its term buckets, docs and dl sum (a
     * doc's tf values add up to its dl). */
   private final case class Side(buckets: Seq[Long], nDocs: Double,
@@ -284,13 +279,6 @@ object SearchIndex {
       Side(r.getSeq[Long](0).sorted, r.getLong(1).toDouble,
         if (r.isNullAt(2)) 0.0 else r.getDouble(2))
     }
-
-  /** Distinct values of a bucket column, as longs. Metadata-scale (at
-    * most the bucket space), so the list lives on the driver. Partition
-    * type inference may read a bucket column back as int. */
-  private def bucketsOf(df: DataFrame, bucketCol: String): Seq[Long] =
-    df.select(col(bucketCol).cast("long")).distinct()
-      .collect().map(_.getLong(0)).sorted.toSeq
 
   /** One table's share of [[mutate]]: the `retracted` buckets are
     * rewritten once (survivors of `ids` plus `rows` for those buckets);
@@ -305,15 +293,14 @@ object SearchIndex {
     if (retracted.nonEmpty) {
       val live = cachedTable(spark, indexDir, table).filter(inRetracted)
       val survivors = ids.fold(live)(live.join(_, Seq("doc_id"), "left_anti"))
-      writeSwapBuckets(
-        rows.fold(survivors)(r => survivors.unionByName(r.filter(inRetracted)))
-          .repartition(col(bucketCol)),
+      IndexDirs.swapBuckets(
+        rows.fold(survivors)(r => survivors.unionByName(r.filter(inRetracted))),
         dir, bucketCol, retracted, store)
     }
     for (r <- rows if added.forall(_.exists(b => !retracted.contains(b))))
-      (if (retracted.isEmpty) r else r.filter(!inRetracted))
-        .repartition(col(bucketCol))
-        .write.mode("append").partitionBy(bucketCol).parquet(dir)
+      IndexDirs.appendBuckets(
+        if (retracted.isEmpty) r else r.filter(!inRetracted),
+        dir, bucketCol, store)
   }
 
   /** Fuzzy query-term expansion (ES `fuzziness: 1`): match each query
@@ -691,132 +678,21 @@ object SearchIndex {
             sum(col("df")).cast("long").as("n_postings"),
             max(col("df")).cast("long").as("max_df"))))
 
-  /** Write `df` to a staging dir then swap it in through the
-    * [[graft.table.CommitStore]] commit primitive (Spark cannot
-    * overwrite a parquet dir that feeds the running plan). The local
-    * store's swap is rename-based; an object-store deployment swaps the
-    * store implementation (manifest commit), not this code. */
-  private def writeSwap(df: DataFrame, dir: String,
-      partitionCol: Option[String],
-      store: graft.table.CommitStore = graft.table.LocalCommitStore): Unit = {
-    import java.nio.file.Paths
-    val tmp = dir + "__tmp"
-    val w = df.write.mode("overwrite")
-    partitionCol.fold(w)(c => w.partitionBy(c)).parquet(tmp)
-    store.swapDir(Paths.get(tmp), Paths.get(dir))
-  }
-
-  /** Partition-local swap: write the merged buckets to a staging dir,
-    * then swap ONLY the touched `bucketCol=v` subdirectories into the
-    * live table — every other bucket directory is untouched (same
-    * files, same bytes). Each subdirectory swap goes through the same
-    * [[graft.table.CommitStore]] primitive as [[writeSwap]]. A bucket
-    * the rewrite emptied (no staged dir) is deleted from the live
-    * table — that's what a rebuild without its rows would produce.
-    *
-    * Invariant kept for readers: the dir is ALWAYS a readable parquet
-    * table. A rewrite that empties EVERY bucket would otherwise leave a
-    * footer-less dir (schema inference fails on the next read), so the
-    * emptied table is published as a FLAT 0-row parquet file carrying
-    * the full schema — `bucketCol` as a regular column. The inverse
-    * transition (first rows arriving into an emptied table) clears that
-    * marker before bucket dirs go live, or partition discovery would
-    * see a mixed flat/partitioned layout. */
-  private def writeSwapBuckets(df: DataFrame, dir: String,
-      bucketCol: String, buckets: Seq[Any],
-      store: graft.table.CommitStore = graft.table.LocalCommitStore): Unit = {
-    import java.nio.file.{Files, Paths}
-    import scala.jdk.CollectionConverters._
-    val dirP = Paths.get(dir)
-    def bucketDirs(): Seq[java.nio.file.Path] =
-      if (!Files.isDirectory(dirP)) Nil
-      else Files.list(dirP).iterator.asScala
-        .filter(_.getFileName.toString.startsWith(s"$bucketCol="))
-        .toSeq
-    def markerFiles(): Seq[java.nio.file.Path] =
-      if (!Files.isDirectory(dirP)) Nil
-      else Files.list(dirP).iterator.asScala.filter { p =>
-        val n = p.getFileName.toString
-        Files.isRegularFile(p) &&
-          (n.startsWith("part-") || n == "_SUCCESS" || n.endsWith(".crc"))
-      }.toSeq
-    val tmp = dir + "__tmp"
-    df.write.mode("overwrite").partitionBy(bucketCol).parquet(tmp)
-    val anyStaged = buckets.exists(b =>
-      Files.exists(Paths.get(tmp, s"$bucketCol=$b")))
-    if (anyStaged && bucketDirs().isEmpty)
-      markerFiles().foreach(store.deleteRecursive) // revive from marker
-    buckets.foreach { b =>
-      val staged = Paths.get(tmp, s"$bucketCol=$b")
-      val live   = Paths.get(dir, s"$bucketCol=$b")
-      if (Files.exists(staged)) store.swapDir(staged, live)
-      else store.deleteRecursive(live)
-    }
-    store.deleteRecursive(Paths.get(tmp))
-    if (bucketDirs().isEmpty) // every bucket emptied: publish the marker
-      writeSwap(df.limit(0), dir, partitionCol = None, store)
-  }
-
-  /** Maintenance — merge the small files that incremental [[update]]s
-    * accrete inside each bucket dir back to one file per bucket (the
-    * per-bucket form of [[graft.table.ParquetCatalog.compact]]): after
-    * thousands of micro-batches a probe pays |files| opens per bucket,
-    * not 1. Only FRAGMENTED buckets (>1 parquet file) are rewritten,
-    * through the same staged swap as [[update]] — results are
-    * bit-identical rows, untouched buckets keep their exact bytes.
-    * Returns (filesBefore, filesAfter) summed over rewritten buckets. */
+  /** Maintenance — [[IndexDirs.compactBuckets]] over the four bucketed
+    * tables (the per-bucket form of
+    * [[graft.table.ParquetCatalog.compact]]): the small files that
+    * incremental [[update]]s accrete inside each bucket dir go back to
+    * one file per bucket. Returns (filesBefore, filesAfter) summed over
+    * rewritten buckets. */
   def compact(spark: SparkSession, indexDir: String,
       store: graft.table.CommitStore = graft.table.LocalCommitStore)
-      : (Long, Long) = {
-    import java.nio.file.{Files, Paths}
-    var before = 0L
-    var after = 0L
+      : (Long, Long) =
     Seq("postings" -> "term_bucket", "positions" -> "term_bucket",
-      "docfreq" -> "term_bucket", "vectors" -> "lsh_bucket")
-      .foreach { case (table, bucketCol) =>
-        val root = Paths.get(s"$indexDir/$table")
-        if (Files.isDirectory(root)) {
-          def filesIn(p: java.nio.file.Path): Int = {
-            val s = Files.list(p)
-            try {
-              var n = 0
-              val it = s.iterator()
-              while (it.hasNext)
-                if (it.next().toString.endsWith(".parquet")) n += 1
-              n
-            } finally s.close()
-          }
-          val ls = Files.list(root)
-          val fragmented = try {
-            val b = Seq.newBuilder[String]
-            val it = ls.iterator()
-            while (it.hasNext) {
-              val p = it.next()
-              val name = p.getFileName.toString
-              if (name.startsWith(s"$bucketCol=") && filesIn(p) > 1) {
-                b += name.stripPrefix(s"$bucketCol=")
-                before += filesIn(p)
-              }
-            }
-            b.result()
-          } finally ls.close()
-          if (fragmented.nonEmpty) {
-            val vals: Seq[Any] =
-              if (bucketCol == "lsh_bucket") fragmented.map(_.toLong)
-              else fragmented.map(_.toInt)
-            val df = spark.read.parquet(s"$indexDir/$table")
-              .filter(col(bucketCol).isin(vals: _*))
-              .repartition(col(bucketCol))
-            writeSwapBuckets(df, s"$indexDir/$table", bucketCol, vals,
-              store)
-            vals.foreach(v =>
-              after += filesIn(root.resolve(s"$bucketCol=$v")))
-          }
-        }
+        "docfreq" -> "term_bucket", "vectors" -> "lsh_bucket")
+      .map { case (table, bucketCol) =>
+        IndexDirs.compactBuckets(spark, s"$indexDir/$table", bucketCol, store)
       }
-    invalidateAll(spark, indexDir)
-    (before, after)
-  }
+      .foldLeft((0L, 0L)) { case ((b, a), (nb, na)) => (b + nb, a + na) }
 
   /** BM25 over the prebuilt index: reads only the query terms' buckets
     * (partition pruning on `term_bucket`), never re-tokenizes the corpus.

@@ -256,5 +256,16 @@ class IvfIndexSpec extends SparkSpec {
       "vec_id", "embedding", qv, 10).collect().toSeq
     val got = IvfIndex.knn(spark, d, qv, 10, nProbe = 8).collect().toSeq
     assert(got === brute)
+
+    // deleting every remaining vector leaves a readable, empty index
+    // that takes updates again
+    val rest = embs.filter(!col("vec_id").isin(victims: _*))
+      .select("vec_id").collect().map(_.getLong(0)).toSeq
+    IvfIndex.delete(spark, d, rest)
+    assert(IvfIndex.knn(spark, d, qv, 10, nProbe = 8).count() === 0)
+    val revived = rest.take(3)
+    IvfIndex.update(embs.filter(col("vec_id").isin(revived: _*)), d)
+    assert(IvfIndex.knn(spark, d, qv, 10, nProbe = 8).collect()
+      .map(_.getLong(0)).toSet === revived.toSet)
   }
 }

@@ -123,6 +123,20 @@ class IvfPqSpec extends SparkSpec {
       numCandidates = 1000000).collect().toSeq
     assert(got === brute)
     assert(!got.exists(r => victims.contains(r.getLong(0))))
+
+    // deleting every remaining vector leaves a readable, empty index
+    // that takes updates again
+    val rest = embs.filter(!col("vec_id").isin(victims: _*))
+      .select("vec_id").collect().map(_.getLong(0)).toSeq
+    IvfPqIndex.delete(spark, d, rest)
+    assert(IvfPqIndex.knn(spark, d, qv, 10, nProbe = 8,
+      numCandidates = 1000000).count() === 0)
+    assert(IvfPqIndex.indexedCount(spark, d) === 0)
+    val revived = rest.take(3)
+    IvfPqIndex.update(embs.filter(col("vec_id").isin(revived: _*)), d)
+    assert(IvfPqIndex.knn(spark, d, qv, 10, nProbe = 8,
+      numCandidates = 1000000).collect().map(_.getLong(0)).toSet ===
+      revived.toSet)
   }
 
   test("compact: updates fragment cells; compact restores one file, same results") {

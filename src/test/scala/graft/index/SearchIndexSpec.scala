@@ -645,9 +645,13 @@ class SearchIndexSpec extends SparkSpec {
       val counts = Seq(
         "update" -> jobsIn(SearchIndex.update(vDocs, vEmbs, d)),
         "upsert" -> jobsIn(SearchIndex.upsert(spark, d, victims, vDocs, vEmbs)),
-        "bulkDelete" -> jobsIn(SearchIndex.bulkDelete(spark, d, victims)))
+        "bulkDelete" -> jobsIn(SearchIndex.bulkDelete(spark, d, victims)),
+        // the retracted ids are no longer indexed: the victims'
+        // summary is their only read
+        "upsert of absent ids" ->
+          jobsIn(SearchIndex.upsert(spark, d, victims, vDocs, vEmbs)))
       assert(counts === Seq("update" -> 17, "upsert" -> 34,
-        "bulkDelete" -> 27))
+        "bulkDelete" -> 27, "upsert of absent ids" -> 26))
     } finally spark.sparkContext.removeSparkListener(listener)
   }
 
@@ -913,5 +917,17 @@ class SearchIndexSpec extends SparkSpec {
     SearchIndex.update(docs, embs, d)
     assert(SearchIndex.bm25(spark, d, "solo qqdoc").count() === 2)
     assert(spark.read.parquet(s"$d/stats").head().getDouble(0) === 2.0)
+    // ... with the flat empty-table marker gone: bucket dirs only
+    Seq("postings", "positions", "docfreq", "vectors").foreach { t =>
+      val rootParts = Files.list(Paths.get(d, t)).toArray
+        .map(_.asInstanceOf[java.nio.file.Path].getFileName.toString)
+        .filter(_.startsWith("part-"))
+      assert(rootParts.isEmpty, s"$t keeps a root marker: ${rootParts.toSeq}")
+    }
+    val ref = Files.createTempDirectory("index_empty_ref").toString
+    SearchIndex.build(docs, embs, ref)
+    def bm(dir: String) = SearchIndex.bm25(spark, dir, "solo qqdoc alpha")
+      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    assert(bm(d) === bm(ref))
   }
 }
