@@ -88,6 +88,24 @@ private[index] object IndexDirs {
     }
   }
 
+  /** Write `df` to the parquet table at `dir` (`mode` "overwrite" or
+    * "append") partitioned by `bucketCol`, ONE file per bucket dir: each
+    * bucket's rows are shuffled to one partition first, instead of
+    * numShufflePartitions tiny files per dir — faster write, fewer opens
+    * per probe. Every bucketed write of the index package goes through
+    * here.
+    *
+    * The partition count is explicit (`spark.sql.shuffle.partitions`):
+    * a plain `repartition(col)` lets AQE coalesce its shuffle, which on
+    * small data leaves ONE task writing every bucket file in turn. A
+    * shuffle with a given partition count is never coalesced, so the
+    * buckets are written by that many tasks side by side. */
+  def writeBuckets(df: DataFrame, dir: String, bucketCol: String,
+      mode: String): Unit =
+    df.repartition(df.sparkSession.sessionState.conf.numShufflePartitions,
+        col(bucketCol))
+      .write.mode(mode).partitionBy(bucketCol).parquet(dir)
+
   /** Write `df` to a staging dir then swap it in as the whole table at
     * `dir` (Spark cannot overwrite a parquet dir that feeds the running
     * plan). The local store's swap is rename-based; an object-store
@@ -118,9 +136,8 @@ private[index] object IndexDirs {
     * or partition discovery would see a mixed flat/partitioned layout. */
   def swapBuckets(df: DataFrame, dir: String, bucketCol: String,
       buckets: Seq[Long], store: CommitStore): Unit = {
-    val parted = df.repartition(col(bucketCol))
     val tmp = dir + "__tmp"
-    parted.write.mode("overwrite").partitionBy(bucketCol).parquet(tmp)
+    writeBuckets(df, tmp, bucketCol, "overwrite")
     val anyStaged = buckets.exists(b =>
       Files.exists(Paths.get(tmp, s"$bucketCol=$b")))
     if (anyStaged && bucketDirs(dir, bucketCol).isEmpty)
@@ -132,7 +149,7 @@ private[index] object IndexDirs {
       else store.deleteRecursive(live)
     }
     store.deleteRecursive(Paths.get(tmp))
-    markIfEmpty(parted, dir, bucketCol, store)
+    markIfEmpty(df, dir, bucketCol, store)
   }
 
   /** Append `df` to the table at `dir` partition-locally: new files land
@@ -141,10 +158,9 @@ private[index] object IndexDirs {
     * and published again if the append brought no rows. */
   def appendBuckets(df: DataFrame, dir: String, bucketCol: String,
       store: CommitStore): Unit = {
-    val parted = df.repartition(col(bucketCol))
     if (bucketDirs(dir, bucketCol).isEmpty) clearMarker(dir, store)
-    parted.write.mode("append").partitionBy(bucketCol).parquet(dir)
-    markIfEmpty(parted, dir, bucketCol, store)
+    writeBuckets(df, dir, bucketCol, "append")
+    markIfEmpty(df, dir, bucketCol, store)
   }
 
   /** Doc-level retraction from the table at `dir`: only the buckets

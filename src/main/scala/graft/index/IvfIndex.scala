@@ -69,11 +69,9 @@ object IvfIndex {
       .setFeaturesCol("features").setPredictionCol("ivf_cell")
       .fit(withVec)
     unit.publish(spark, indexDir, store) { vDir =>
-      model.transform(withVec)
-        .select(col("doc_id"), col("embedding"), col("ivf_cell"))
-        .repartition(col("ivf_cell"))
-        .write.mode("overwrite").partitionBy("ivf_cell")
-        .parquet(s"$vDir/ivf_vectors")
+      IndexDirs.writeBuckets(model.transform(withVec)
+          .select(col("doc_id"), col("embedding"), col("ivf_cell")),
+        s"$vDir/ivf_vectors", "ivf_cell", "overwrite")
 
       model.clusterCenters.zipWithIndex
         .map { case (c, i) => (i, c.toArray.toSeq) }.toSeq
@@ -196,11 +194,9 @@ object IvfIndex {
     // the live dirs feed the staged writes, so the live version must
     // stay in place (and keeps serving) until the pointer moves
     unit.publish(spark, indexDir, store) { vDir =>
-      model.transform(current)
-        .select(col("doc_id"), col("embedding"), col("ivf_cell"))
-        .repartition(col("ivf_cell"))
-        .write.mode("overwrite").partitionBy("ivf_cell")
-        .parquet(s"$vDir/ivf_vectors")
+      IndexDirs.writeBuckets(model.transform(current)
+          .select(col("doc_id"), col("embedding"), col("ivf_cell")),
+        s"$vDir/ivf_vectors", "ivf_cell", "overwrite")
       model.clusterCenters.zipWithIndex
         .map { case (c, i) => (i, c.toArray.toSeq) }.toSeq
         .toDF("cell", "centroid")

@@ -120,13 +120,11 @@ object IvfPqIndex {
         subs.select("doc_id", "sub_id", "subvec"), codebooks)
 
       unit.publish(spark, indexDir, store) { vDir =>
-        codes
-          .join(assigned, "doc_id")
-          .select(col("doc_id"), col("embedding"), col("codes"),
-            col("ivf_cell"))
-          .repartition(col("ivf_cell"))
-          .write.mode("overwrite").partitionBy("ivf_cell")
-          .parquet(s"$vDir/vectors")
+        IndexDirs.writeBuckets(codes
+            .join(assigned, "doc_id")
+            .select(col("doc_id"), col("embedding"), col("codes"),
+              col("ivf_cell")),
+          s"$vDir/vectors", "ivf_cell", "overwrite")
         centroids.select(col("ivf_cell").as("cell"), col("centroid"))
           .coalesce(1).write.mode("overwrite").parquet(s"$vDir/centroids")
         codebooks.coalesce(1).write.mode("overwrite")

@@ -24,9 +24,10 @@ import graft.search.TextSearch
   *    (IVF-style partition pruning; the ES `num_candidates` knob becomes
   *    the Hamming probe radius).
   *
-  * Build is one pass over docs (postings + df + stats share the
-  * tokenized lineage) and one over embeddings. At 100 TB both are
-  * embarrassingly parallel writes; queries never scan the corpus.
+  * Build is one postings pass over docs (postings, df and stats share
+  * one persisted relation), one positions pass and one pass over
+  * embeddings. At 100 TB all are embarrassingly parallel writes;
+  * queries never scan the corpus.
   */
 object SearchIndex {
 
@@ -46,48 +47,35 @@ object SearchIndex {
     (java.lang.Long.parseLong(hex, 16) % TermBuckets).toInt
   }
 
-  /** Build/overwrite all index tables. */
+  /** Build/overwrite all index tables. The postings are computed once
+    * and persisted: written, then summed into docfreq and stats from
+    * the cached relation, never read back from disk. */
   def build(docs: DataFrame, embs: DataFrame, indexDir: String,
       idCol: String = "doc_id", textCol: String = "text",
       vecIdCol: String = "vec_id", vecCol: String = "embedding",
       dim: Int = 64): Unit = {
-    // repartition by the partition column first: one file per bucket dir
-    // instead of numShufflePartitions tiny files per dir — faster build,
-    // fewer opens per probe.
-    val postings = TextSearch.buildPostings(docs, idCol, textCol)
-      .withColumn("term_bucket", termBucket(col("term")))
-    postings.repartition(col("term_bucket"))
-      .write.mode("overwrite").partitionBy("term_bucket")
-      .parquet(s"$indexDir/postings")
-
-    TextSearch.positionalPostings(docs, idCol, textCol)
-      .withColumn("term_bucket", termBucket(col("term")))
-      .repartition(col("term_bucket"))
-      .write.mode("overwrite").partitionBy("term_bucket")
-      .parquet(s"$indexDir/positions")
-
-    val built = postings.sparkSession.read.parquet(s"$indexDir/postings")
-    built.groupBy("term_bucket", "term")
-      .agg(countDistinct("doc_id").cast("double").as("df"))
-      .repartition(col("term_bucket"))
-      .write.mode("overwrite").partitionBy("term_bucket")
-      .parquet(s"$indexDir/docfreq")
-    // sum_dl is kept alongside avgdl so incremental update can merge
-    // stats EXACTLY: dl values are integer-valued doubles, so their sum
-    // is order-independent and avgdl' = sum'/n' is bit-identical to a
-    // full rebuild (n*avgdl would NOT reconstruct the sum exactly)
-    built.select("doc_id", "dl").distinct()
-      .agg(count(lit(1)).cast("double").as("n_docs"),
-        avg("dl").as("avgdl"), sum("dl").as("sum_dl"))
-      .write.mode("overwrite").parquet(s"$indexDir/stats")
-
-    embs.select(col(vecIdCol).as("doc_id"), col(vecCol).as("embedding"))
-      .withColumn("lsh_bucket",
-        VectorFunctions.lshSignature(col("embedding"), dim, LshBits))
-      .repartition(col("lsh_bucket"))
-      .write.mode("overwrite").partitionBy("lsh_bucket")
-      .parquet(s"$indexDir/vectors")
-    invalidateAll(postings.sparkSession, indexDir)
+    val all = Delta(docs, embs, idCol, textCol, vecIdCol, vecCol, dim)
+    val postings = all.postings.persist()
+    try {
+      IndexDirs.writeBuckets(postings, s"$indexDir/postings", "term_bucket",
+        "overwrite")
+      IndexDirs.writeBuckets(all.positions, s"$indexDir/positions",
+        "term_bucket", "overwrite")
+      IndexDirs.writeBuckets(postings.groupBy("term_bucket", "term")
+          .agg(countDistinct("doc_id").cast("double").as("df")),
+        s"$indexDir/docfreq", "term_bucket", "overwrite")
+      // sum_dl is kept alongside avgdl so incremental update can merge
+      // stats EXACTLY: dl values are integer-valued doubles, so their sum
+      // is order-independent and avgdl' = sum'/n' is bit-identical to a
+      // full rebuild (n*avgdl would NOT reconstruct the sum exactly)
+      postings.select("doc_id", "dl").distinct()
+        .agg(count(lit(1)).cast("double").as("n_docs"),
+          avg("dl").as("avgdl"), sum("dl").as("sum_dl"))
+        .write.mode("overwrite").parquet(s"$indexDir/stats")
+    } finally postings.unpersist()
+    IndexDirs.writeBuckets(all.vectors, s"$indexDir/vectors", "lsh_bucket",
+      "overwrite")
+    invalidateAll(docs.sparkSession, indexDir)
   }
 
   /** Query-side reads go through the session plan cache (file listing +
@@ -161,8 +149,8 @@ object SearchIndex {
       spark.read.parquet(s"$srcDir/positions"),
       spark.read.parquet(s"$srcDir/vectors"))), store)
 
-  /** The postings, positions and vectors of docs being added, bucketed
-    * like the index tables. */
+  /** The postings, positions and vectors of docs being added (by a
+    * build, all of them), bucketed like the index tables. */
   private final case class Delta(postings: DataFrame, positions: DataFrame,
       vectors: DataFrame)
 

@@ -477,6 +477,12 @@ final class GraftServer(
   private def indexExists(name: String): Boolean =
     Files.isDirectory(indexDir(name).resolve("source"))
 
+  /** The index's `source` rows, through the session plan cache (one
+    * file listing and schema inference per write of `source`, not per
+    * read); every write or delete of `source` invalidates it. */
+  private def sourceTable(name: String): DataFrame =
+    graft.Tables.loadPath(spark, indexDir(name).resolve("source").toString)
+
   /** Rows of a catalog table keyed for the index: stable long `doc_id`
     * derived from the uuid id (md5 — same bucket function the index
     * itself uses), text + embedding legs split out. */
@@ -512,7 +518,7 @@ final class GraftServer(
           SearchIndex.build(docs, embs, dir.toString, dim = embedder.dim)
           rows.write.mode("overwrite").parquet(srcDir.toString)
         } else {
-          val src = spark.read.parquet(srcDir.toString)
+          val src = sourceTable(idxName)
           SearchIndex.upsert(spark, dir.toString,
             src.filter(col("hashed_filepath") === hfp).select("doc_id"),
             docs, embs, dim = embedder.dim)
@@ -522,6 +528,7 @@ final class GraftServer(
           deleteRec(srcDir)
           Files.move(tmp, srcDir)
         }
+        graft.Tables.invalidate(spark, srcDir.toString)
         ok(JObj(
           "message" -> JStr(s"[$idxName] indexing complete"),
           "hashed_filepath" -> JStr(hfp)))
@@ -535,7 +542,7 @@ final class GraftServer(
   private def getDocumentRoute(idxName: String, hfp: String): Http =
     locked(idxName, write = false) {
       if (!indexExists(idxName)) fail(404, s"[$idxName] document '$hfp' not found")
-      val src = spark.read.parquet(indexDir(idxName).resolve("source").toString)
+      val src = sourceTable(idxName)
       val sortCols = Seq("page", "id").filter(src.columns.contains)
       val rows = src.filter(col("hashed_filepath") === hfp)
         .orderBy(sortCols.map(col): _*).drop("doc_id")
@@ -567,8 +574,7 @@ final class GraftServer(
       if (!indexExists(idxName)) fail(503, s"index not found: $idxName")
       val hits = SearchIndex.hybrid(spark, dir.toString, queryText, embedder,
         size = size, minScore = minScore)
-      val src = spark.read.parquet(dir.resolve("source").toString)
-      hits.join(src, Seq("doc_id"), "inner")
+      hits.join(sourceTable(idxName), Seq("doc_id"), "inner")
         .orderBy(col("score").desc, col("doc_id").asc)
         .drop("doc_id")
         .collect().toSeq
@@ -605,6 +611,7 @@ final class GraftServer(
           "message" -> JStr(s"index '$name' does not exist")))
       else {
         deleteRec(dir)
+        graft.Tables.invalidate(spark, dir.resolve("source").toString)
         spark.catalog.clearCache()
         ok(JObj("index_name" -> JStr(name), "deleted" -> JBool(true),
           "message" -> JStr(s"index '$name' deleted")))

@@ -28,16 +28,48 @@ class SearchIndexSpec extends SparkSpec {
   }
 
   test("compact layout: exactly one parquet file per bucket dir") {
-    // repartition(bucketCol) before partitionBy sends each bucket to ONE
-    // shuffle partition → one file per dir. More files per dir = the
-    // tiny-file tax per probe, times every query.
-    def maxFiles(table: String, prefix: String): Int =
-      Files.list(Paths.get(indexDir, table)).toArray.map(_.toString)
+    // IndexDirs.writeBuckets sends each bucket to ONE shuffle partition
+    // → one file per dir. More files per dir = the tiny-file tax per
+    // probe, times every query.
+    def filesPerDir(table: String, prefix: String): Seq[Int] =
+      Files.list(Paths.get(indexDir, table)).toArray.map(_.toString).toSeq
         .filter(_.contains(prefix))
         .map(d => Files.list(Paths.get(d)).toArray.map(_.toString)
-          .count(_.endsWith(".parquet"))).max
-    assert(maxFiles("postings", "term_bucket=") === 1)
-    assert(maxFiles("vectors", "lsh_bucket=") === 1)
+          .count(_.endsWith(".parquet")))
+    for (t <- Seq("postings", "positions", "docfreq")) {
+      val n = filesPerDir(t, "term_bucket=")
+      assert(n.nonEmpty && n.forall(_ == 1), t)
+    }
+    val v = filesPerDir("vectors", "lsh_bucket=")
+    assert(v.nonEmpty && v.forall(_ == 1))
+  }
+
+  test("build derives docfreq and stats as from its written postings") {
+    val p = spark.read.parquet(s"$indexDir/postings")
+    val df = p.groupBy("term_bucket", "term")
+      .agg(countDistinct("doc_id").cast("double").as("df"))
+      .select("term_bucket", "term", "df")
+    val built = spark.read.parquet(s"$indexDir/docfreq")
+      .select("term_bucket", "term", "df")
+    assert(built.exceptAll(df).isEmpty && df.exceptAll(built).isEmpty)
+    val stats = p.select("doc_id", "dl").distinct()
+      .agg(count(lit(1)).cast("double").as("n_docs"),
+        avg("dl").as("avgdl"), sum("dl").as("sum_dl"))
+    assert(spark.read.parquet(s"$indexDir/stats").collect().toSeq ===
+      stats.collect().toSeq)
+  }
+
+  test("build leaves no cached relation, also when its write fails") {
+    val docs = Tables.documents(spark, SfDir).select("doc_id", "text")
+    val embs = Tables.embeddings(spark, SfDir).select("vec_id", "embedding")
+    spark.catalog.clearCache()
+    SearchIndex.build(docs, embs,
+      Files.createTempDirectory("index_nocache").toString)
+    assert(spark.sharedState.cacheManager.isEmpty)
+    // a regular file where the index dir should be: the first write fails
+    val file = Files.createTempFile("index_nocache", ".txt").toString
+    intercept[Exception](SearchIndex.build(docs, embs, file))
+    assert(spark.sharedState.cacheManager.isEmpty)
   }
 
   test("termBucket expression matches driver-side termBucketOf") {
@@ -615,23 +647,36 @@ class SearchIndexSpec extends SparkSpec {
     }
   }
 
-  test("Spark jobs per call of update, bulkDelete and upsert") {
+  /** Spark jobs started while `f` runs. */
+  private def jobsIn(f: => Unit): Int = {
     import java.util.concurrent.atomic.AtomicInteger
     import org.apache.spark.SpecBus
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    import spark.implicits._
     val jobs = new AtomicInteger
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
         jobs.incrementAndGet()
     }
-    def jobsIn(f: => Unit): Int = {
-      SpecBus.drain(spark.sparkContext)
-      val before = jobs.get
+    SpecBus.drain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try {
       f
       SpecBus.drain(spark.sparkContext)
-      jobs.get - before
-    }
+      jobs.get
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("Spark jobs per build") {
+    val docs = Tables.documents(spark, SfDir).select("doc_id", "text")
+    val embs = Tables.embeddings(spark, SfDir).select("vec_id", "embedding")
+    def build(): Int = jobsIn(SearchIndex.build(docs, embs,
+      Files.createTempDirectory("index_build_jobs").toString))
+    build() // the input tables' plans are loaded once per session
+    assert(build() === 18)
+  }
+
+  test("Spark jobs per call of update, bulkDelete and upsert") {
+    import spark.implicits._
     val docs = Tables.documents(spark, SfDir).select("doc_id", "text")
     val embs = Tables.embeddings(spark, SfDir).select("vec_id", "embedding")
     val d = Files.createTempDirectory("index_jobs").toString
@@ -640,19 +685,16 @@ class SearchIndexSpec extends SparkSpec {
       (910002L, "qqbeta qqgamma")).toDF("doc_id", "text")
     val vEmbs = constEmbs(910001L -> 0.1f, 910002L -> 0.2f)
     val victims = Seq(910001L, 910002L).toDF("doc_id")
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val counts = Seq(
-        "update" -> jobsIn(SearchIndex.update(vDocs, vEmbs, d)),
-        "upsert" -> jobsIn(SearchIndex.upsert(spark, d, victims, vDocs, vEmbs)),
-        "bulkDelete" -> jobsIn(SearchIndex.bulkDelete(spark, d, victims)),
-        // the retracted ids are no longer indexed: the victims'
-        // summary is their only read
-        "upsert of absent ids" ->
-          jobsIn(SearchIndex.upsert(spark, d, victims, vDocs, vEmbs)))
-      assert(counts === Seq("update" -> 17, "upsert" -> 34,
-        "bulkDelete" -> 27, "upsert of absent ids" -> 26))
-    } finally spark.sparkContext.removeSparkListener(listener)
+    val counts = Seq(
+      "update" -> jobsIn(SearchIndex.update(vDocs, vEmbs, d)),
+      "upsert" -> jobsIn(SearchIndex.upsert(spark, d, victims, vDocs, vEmbs)),
+      "bulkDelete" -> jobsIn(SearchIndex.bulkDelete(spark, d, victims)),
+      // the retracted ids are no longer indexed: the victims'
+      // summary is their only read
+      "upsert of absent ids" ->
+        jobsIn(SearchIndex.upsert(spark, d, victims, vDocs, vEmbs)))
+    assert(counts === Seq("update" -> 17, "upsert" -> 34,
+      "bulkDelete" -> 27, "upsert of absent ids" -> 26))
   }
 
   test("compact merges fragmented buckets; results and untouched bytes identical") {

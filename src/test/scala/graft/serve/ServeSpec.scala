@@ -290,6 +290,59 @@ class ServeSpec extends SparkSpec {
     assert(delete("/indices/serve_conc")._1 == 200)
   }
 
+  test("source reads follow every write of source: upsert, delete, re-index") {
+    // one file, indexed, then re-parsed with new page text at the same
+    // path (same hashed_filepath) and upserted
+    def stage(text: String): Unit = {
+      assert(postMultipart("/upload",
+        Seq("local_path" -> "C:/local/fresh.pdf", "server_path" -> "fresh/v"),
+        "file", "fresh.pdf", onePagePdf(text))._1 == 200)
+      assert(postForm("/parse_pdf_by_path",
+        "pdf_path" -> s"$base/docs/uploaded/fresh/v/fresh.pdf",
+        "lv1_cat" -> "fresh", "lv2_cat" -> "v")._1 == 200)
+      delete("/tables/fresh_docs")
+      postJson("/create_tables", """{"table_name": "fresh_docs"}""")
+      assert(postForm("/insert_from_pickle", "table_name" -> "fresh_docs",
+        "pickle_path" -> s"$base/docs/parsed/fresh/v")._1 == 200)
+    }
+    def pageText(hfp: String): String = {
+      val (c, b) = get(s"/document/fresh_idx/$hfp")
+      assert(c == 200, s"document failed: $b")
+      arr(b).map(p => obj(p).str("page_content").get).mkString
+    }
+    def topHit(query: String): String = {
+      val (c, b) = postJson("/search",
+        s"""{"index_name": "fresh_idx", "query_text": "$query",
+            "size": 5, "min_score": 0.0}""")
+      assert(c == 200, s"search failed: $b")
+      obj(obj(b).arr("results").get.head).str("page_content").get
+    }
+    val index = """{"index_name": "fresh_idx", "table_name": "fresh_docs",
+        "hashed_filepath": "HFP"}"""
+
+    stage("Kiwi orchard almanac")
+    val hfp = obj(get("/unique-filepath/fresh_docs")._2)
+      .arr("hashed_filepaths").get.collectFirst { case JStr(s) => s }.get
+    val (c1, b1) = postJson("/index/document", index.replace("HFP", hfp))
+    assert(c1 == 200, s"index failed: $b1")
+    assert(pageText(hfp).contains("Kiwi orchard almanac"))
+    assert(topHit("kiwi orchard").contains("Kiwi orchard almanac"))
+
+    stage("Quokka harbour ledger")
+    val (c2, b2) = postJson("/index/document", index.replace("HFP", hfp))
+    assert(c2 == 200, s"upsert failed: $b2")
+    assert(pageText(hfp).contains("Quokka harbour ledger"))
+    assert(!pageText(hfp).contains("Kiwi"))
+    assert(topHit("quokka harbour").contains("Quokka harbour ledger"))
+
+    assert(delete("/indices/fresh_idx")._1 == 200)
+    val (c3, b3) = postJson("/index/document", index.replace("HFP", hfp))
+    assert(c3 == 200, s"re-index failed: $b3")
+    assert(pageText(hfp).contains("Quokka harbour ledger"))
+    assert(topHit("quokka harbour").contains("Quokka harbour ledger"))
+    assert(delete("/indices/fresh_idx")._1 == 200)
+  }
+
   test("error envelope: FastAPI-style detail objects") {
     val (c1, b1) = postJson("/search", """{"index_name": "nope"}""")
     assert(c1 == 400 && obj(b1).fields.contains("detail"))
