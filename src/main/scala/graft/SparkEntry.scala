@@ -9,6 +9,7 @@ import graft.embed.DeterministicEmbedder
 import graft.functions.{Hyperplanes, TextFunctions, VectorFunctions}
 import graft.operators.Sessionize
 import graft.search.{HybridSearch, TextSearch, VectorSearch}
+import graft.table.LocalFs
 import graft.text.TextAnalysis
 
 /** Driver contract — the registry of every implemented operator
@@ -1076,13 +1077,13 @@ object SparkEntry {
       val old  = docs.filter(col("doc_id") % 5 =!= 0)
       val lbl = java.nio.file.Files
         .createTempDirectory("graft_cc_labels_").toString
-      Dedup.nearDupClusters(old, "doc_id",
-          Dedup.minhashCandidatePairs(old, "doc_id", "text"))
-        .write.mode("overwrite").parquet(lbl)
+      LocalFs.write(Dedup.nearDupClusters(old, "doc_id",
+          Dedup.minhashCandidatePairs(old, "doc_id", "text")))
+        .mode("overwrite").parquet(lbl)
       val idx = java.nio.file.Files
         .createTempDirectory("graft_cc_bands_").toString
-      Dedup.minhashBandIndex(old, "doc_id", "text")
-        .write.mode("overwrite").parquet(idx)
+      LocalFs.write(Dedup.minhashBandIndex(old, "doc_id", "text"))
+        .mode("overwrite").parquet(idx)
       (lbl, idx)
     }
 
@@ -5714,9 +5715,9 @@ object SparkEntry {
         val basePath = s"$dir/customer.parquet"
         val mvPath =
           java.nio.file.Files.createTempDirectory("graft_mvrw_").toString
-        graft.table.MaterializedView.refresh(s.read.parquet(basePath),
-            "c_mktsegment", "c_acctbal")
-          .write.mode("overwrite").parquet(mvPath)
+        LocalFs.write(graft.table.MaterializedView.refresh(
+            s.read.parquet(basePath), "c_mktsegment", "c_acctbal"))
+          .mode("overwrite").parquet(mvPath)
         MvRewrite.register(s, basePath, mvPath, "c_mktsegment",
           "c_acctbal")
         s.read.parquet(basePath).groupBy("c_mktsegment")
@@ -10985,7 +10986,7 @@ object SparkEntry {
         val tmp = java.nio.file.Files
           .createTempDirectory("graft_csvrt_").toString
         val csvDir = tmp + "/nation_csv"
-        Tables.nation(s, dir).coalesce(1).write
+        LocalFs.write(Tables.nation(s, dir).coalesce(1))
           .option("header", "true")
           .option("ignoreLeadingWhiteSpace", "false")
           .option("ignoreTrailingWhiteSpace", "false")

@@ -7,7 +7,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 
-import graft.table.CommitStore
+import graft.table.{CommitStore, LocalFs}
 
 /** The storage discipline shared by every persisted index: the versioned
   * unit of the vector indexes and the staged table/bucket swaps that
@@ -102,9 +102,10 @@ private[index] object IndexDirs {
     * buckets are written by that many tasks side by side. */
   def writeBuckets(df: DataFrame, dir: String, bucketCol: String,
       mode: String): Unit =
-    df.repartition(df.sparkSession.sessionState.conf.numShufflePartitions,
-        col(bucketCol))
-      .write.mode(mode).partitionBy(bucketCol).parquet(dir)
+    LocalFs.write(df.repartition(
+        df.sparkSession.sessionState.conf.numShufflePartitions,
+        col(bucketCol)))
+      .mode(mode).partitionBy(bucketCol).parquet(dir)
 
   /** Write `df` to a staging dir then swap it in as the whole table at
     * `dir` (Spark cannot overwrite a parquet dir that feeds the running
@@ -113,7 +114,7 @@ private[index] object IndexDirs {
     * this code. */
   def writeSwap(df: DataFrame, dir: String, store: CommitStore): Unit = {
     val tmp = dir + "__tmp"
-    df.write.mode("overwrite").parquet(tmp)
+    LocalFs.write(df).mode("overwrite").parquet(tmp)
     store.swapDir(Paths.get(tmp), Paths.get(dir))
   }
 

@@ -6,7 +6,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.VectorFunctions
-import graft.table.{CommitStore, LocalCommitStore}
+import graft.table.{CommitStore, LocalCommitStore, LocalFs}
 
 /** IVF (inverted-file) vector index: k-means cells instead of LSH
   * hyperplanes. Build fits MLlib KMeans (seeded, deterministic), assigns
@@ -73,10 +73,10 @@ object IvfIndex {
           .select(col("doc_id"), col("embedding"), col("ivf_cell")),
         s"$vDir/ivf_vectors", "ivf_cell", "overwrite")
 
-      model.clusterCenters.zipWithIndex
-        .map { case (c, i) => (i, c.toArray.toSeq) }.toSeq
-        .toDF("cell", "centroid")
-        .coalesce(1).write.mode("overwrite").parquet(s"$vDir/centroids")
+      LocalFs.write(model.clusterCenters.zipWithIndex
+          .map { case (c, i) => (i, c.toArray.toSeq) }.toSeq
+          .toDF("cell", "centroid").coalesce(1))
+        .mode("overwrite").parquet(s"$vDir/centroids")
 
       // SQ8 codebook: per-dim (min, max) over the build corpus — like the
       // centroids, this is frozen index metadata (incremental updates do
@@ -85,8 +85,8 @@ object IvfIndex {
       val dim = embs.select(size(col(vecCol))).head().getInt(0)
       val (mn, mx) = graft.search.VectorSearch.quantizeStats(
         embs.select(col(vecCol)), vecCol, dim)
-      Seq((mn.toSeq, mx.toSeq)).toDF("mns", "mxs")
-        .coalesce(1).write.mode("overwrite").parquet(s"$vDir/sq_stats")
+      LocalFs.write(Seq((mn.toSeq, mx.toSeq)).toDF("mns", "mxs").coalesce(1))
+        .mode("overwrite").parquet(s"$vDir/sq_stats")
     }
   }
 
@@ -197,18 +197,16 @@ object IvfIndex {
       IndexDirs.writeBuckets(model.transform(current)
           .select(col("doc_id"), col("embedding"), col("ivf_cell")),
         s"$vDir/ivf_vectors", "ivf_cell", "overwrite")
-      model.clusterCenters.zipWithIndex
-        .map { case (c, i) => (i, c.toArray.toSeq) }.toSeq
-        .toDF("cell", "centroid")
-        .coalesce(1).write.mode("overwrite")
-        .parquet(s"$vDir/centroids")
+      LocalFs.write(model.clusterCenters.zipWithIndex
+          .map { case (c, i) => (i, c.toArray.toSeq) }.toSeq
+          .toDF("cell", "centroid").coalesce(1))
+        .mode("overwrite").parquet(s"$vDir/centroids")
       val dim = model.clusterCenters.head.size
       val (mn, mx) = graft.search.VectorSearch.quantizeStats(
         graft.Tables.loadPath(spark, s"$liveDir/ivf_vectors")
           .select(col("embedding")), "embedding", dim)
-      Seq((mn.toSeq, mx.toSeq)).toDF("mns", "mxs")
-        .coalesce(1).write.mode("overwrite")
-        .parquet(s"$vDir/sq_stats")
+      LocalFs.write(Seq((mn.toSeq, mx.toSeq)).toDF("mns", "mxs").coalesce(1))
+        .mode("overwrite").parquet(s"$vDir/sq_stats")
     }
     true
   }

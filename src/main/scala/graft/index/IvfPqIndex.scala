@@ -6,7 +6,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.VectorFunctions
-import graft.table.{CommitStore, LocalCommitStore}
+import graft.table.{CommitStore, LocalCommitStore, LocalFs}
 
 /** IVF-PQ composite vector index — the standard billion-scale ANN
   * layout (FAISS `IndexIVFPQ`): a coarse k-means quantizer bounds the
@@ -125,9 +125,10 @@ object IvfPqIndex {
             .select(col("doc_id"), col("embedding"), col("codes"),
               col("ivf_cell")),
           s"$vDir/vectors", "ivf_cell", "overwrite")
-        centroids.select(col("ivf_cell").as("cell"), col("centroid"))
-          .coalesce(1).write.mode("overwrite").parquet(s"$vDir/centroids")
-        codebooks.coalesce(1).write.mode("overwrite")
+        LocalFs.write(centroids.select(col("ivf_cell").as("cell"),
+            col("centroid")).coalesce(1))
+          .mode("overwrite").parquet(s"$vDir/centroids")
+        LocalFs.write(codebooks.coalesce(1)).mode("overwrite")
           .parquet(s"$vDir/codebooks")
       }
     } finally subs.unpersist()

@@ -6,7 +6,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.VectorFunctions
-import graft.table.{CommitStore, LocalCommitStore}
+import graft.table.{CommitStore, LocalCommitStore, LocalFs}
 
 /** Product-quantized (PQ) vector index: the memory-scale ANN path.
   *
@@ -132,11 +132,10 @@ object PqIndex {
       val codes = assignCodes(subs, codebooks)
 
       unit.publish(spark, indexDir, store) { vDir =>
-        codes
-          .join(embs.select(col(idCol).as("doc_id"),
-            col(vecCol).as("embedding")), "doc_id")
-          .write.mode("overwrite").parquet(s"$vDir/pq_vectors")
-        codebooks.coalesce(1).write.mode("overwrite")
+        LocalFs.write(codes.join(embs.select(col(idCol).as("doc_id"),
+            col(vecCol).as("embedding")), "doc_id"))
+          .mode("overwrite").parquet(s"$vDir/pq_vectors")
+        LocalFs.write(codebooks.coalesce(1)).mode("overwrite")
           .parquet(s"$vDir/pq_codebooks")
       }
     } finally subs.unpersist()
@@ -163,10 +162,10 @@ object PqIndex {
     val subs = newEmbs.select(col(idCol).as("doc_id"),
       posexplode(subVectors(col(vecCol), m, subDim))
         .as(Seq("sub_id", "subvec")))
-    assignCodes(subs, codebooks)
-      .join(newEmbs.select(col(idCol).as("doc_id"),
-        col(vecCol).as("embedding")), "doc_id")
-      .write.mode("append").parquet(s"$vDir/pq_vectors")
+    LocalFs.write(assignCodes(subs, codebooks)
+        .join(newEmbs.select(col(idCol).as("doc_id"),
+          col(vecCol).as("embedding")), "doc_id"))
+      .mode("append").parquet(s"$vDir/pq_vectors")
     graft.Tables.invalidate(spark, s"$vDir/pq_vectors")
     countCache.remove(vDir)
   }

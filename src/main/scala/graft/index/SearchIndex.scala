@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.embed.Embedder
 import graft.functions.{TextFunctions, VectorFunctions}
 import graft.search.TextSearch
+import graft.table.LocalFs
 
 /** Persisted search index (reference E2: RDB rows → Elasticsearch index,
   * `/root/reference/backend/process/elasticsearch_index.py:113-172`; the
@@ -68,10 +69,10 @@ object SearchIndex {
       // stats EXACTLY: dl values are integer-valued doubles, so their sum
       // is order-independent and avgdl' = sum'/n' is bit-identical to a
       // full rebuild (n*avgdl would NOT reconstruct the sum exactly)
-      postings.select("doc_id", "dl").distinct()
-        .agg(count(lit(1)).cast("double").as("n_docs"),
-          avg("dl").as("avgdl"), sum("dl").as("sum_dl"))
-        .write.mode("overwrite").parquet(s"$indexDir/stats")
+      LocalFs.write(postings.select("doc_id", "dl").distinct()
+          .agg(count(lit(1)).cast("double").as("n_docs"),
+            avg("dl").as("avgdl"), sum("dl").as("sum_dl")))
+        .mode("overwrite").parquet(s"$indexDir/stats")
     } finally postings.unpersist()
     IndexDirs.writeBuckets(all.vectors, s"$indexDir/vectors", "lsh_bucket",
       "overwrite")

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.embed.{BatchEmbed, Embedder}
 import graft.functions.TextFunctions
+import graft.table.LocalFs
 
 /** Per-page text extracted from one source file (reference S4: Docling
   * parses a PDF into one markdown Document per page,
@@ -194,7 +195,8 @@ object Ingest {
       explodePages(scanBinaryFiles(spark, inDir, glob), extractor), inDir)
     val embedded = BatchEmbed.withEmbedding(
       enriched, "page_content", "embeddings", embedder)
-    embedded.write.mode("overwrite").partitionBy("lv1_cat").parquet(outDir)
+    LocalFs.write(embedded).mode("overwrite").partitionBy("lv1_cat")
+      .parquet(outDir)
     embedded
   }
 }

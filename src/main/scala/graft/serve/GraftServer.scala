@@ -18,7 +18,7 @@ import graft.embed.{DeterministicEmbedder, Embedder}
 import graft.functions.TextFunctions
 import graft.index.SearchIndex
 import graft.ingest.{OcrEngine, PageExtractor, PdfPageExtractor, TemplateOcrEngine}
-import graft.table.ParquetCatalog
+import graft.table.{LocalCommitStore, LocalFs, ParquetCatalog}
 
 /** The reference's serving layer (FastAPI app, `backend/server.py:34-37`;
   * routers `backend/routers/{pg_rdb,upload,parser,es_index}.py`)
@@ -76,9 +76,12 @@ final class GraftServer(
 
   private val locks = new ConcurrentHashMap[String, ReentrantReadWriteLock]
 
+  private def lockOf(name: String): ReentrantReadWriteLock =
+    locks.computeIfAbsent(name, _ => new ReentrantReadWriteLock)
+
   /** Run `body` under index `name`'s write lock (`write`) or read lock. */
   private def locked[T](name: String, write: Boolean)(body: => T): T = {
-    val rw = locks.computeIfAbsent(name, _ => new ReentrantReadWriteLock)
+    val rw = lockOf(name)
     val l = if (write) rw.writeLock else rw.readLock
     l.lock()
     try body finally l.unlock()
@@ -457,11 +460,11 @@ final class GraftServer(
       StructField("lv3_cat", StringType), StructField("lv4_cat", StringType),
       StructField("embeddings", ArrayType(FloatType)),
       StructField("status", StringType)))
-    spark.createDataFrame(rows.asJava, schema)
-      .withColumn("created_at", current_timestamp())
-      .withColumn("updated_at", current_timestamp())
-      .coalesce(1)
-      .write.mode("overwrite").parquet(outDir.resolve(s"$stem.parquet").toString)
+    LocalFs.write(spark.createDataFrame(rows.asJava, schema)
+        .withColumn("created_at", current_timestamp())
+        .withColumn("updated_at", current_timestamp())
+        .coalesce(1))
+      .mode("overwrite").parquet(outDir.resolve(s"$stem.parquet").toString)
   }
 
   private def md5Hex(s: String): String =
@@ -474,8 +477,15 @@ final class GraftServer(
     require(name.matches("[A-Za-z0-9_.-]+"), s"bad index name: $name")
     indicesDir.resolve(name)
   }
-  private def indexExists(name: String): Boolean =
-    Files.isDirectory(indexDir(name).resolve("source"))
+  /** An index exists when its `source` table does. A crash inside the
+    * `source` swap of [[indexDocumentRoute]] leaves only `source__old`,
+    * which is restored first; readers share the read lock, so the heal
+    * is serialized on the index's lock object. */
+  private def indexExists(name: String): Boolean = {
+    val src = indexDir(name).resolve("source")
+    lockOf(name).synchronized(LocalCommitStore.healSwap(src))
+    Files.isDirectory(src)
+  }
 
   /** The index's `source` rows, through the session plan cache (one
     * file listing and schema inference per write of `source`, not per
@@ -516,17 +526,17 @@ final class GraftServer(
         val srcDir = dir.resolve("source")
         if (!indexExists(idxName)) {
           SearchIndex.build(docs, embs, dir.toString, dim = embedder.dim)
-          rows.write.mode("overwrite").parquet(srcDir.toString)
+          LocalFs.write(rows).mode("overwrite").parquet(srcDir.toString)
         } else {
           val src = sourceTable(idxName)
           SearchIndex.upsert(spark, dir.toString,
             src.filter(col("hashed_filepath") === hfp).select("doc_id"),
             docs, embs, dim = embedder.dim)
           val tmp = dir.resolve("source__tmp")
-          src.filter(col("hashed_filepath") =!= hfp).unionByName(rows)
-            .write.mode("overwrite").parquet(tmp.toString)
-          deleteRec(srcDir)
-          Files.move(tmp, srcDir)
+          LocalFs.write(src.filter(col("hashed_filepath") =!= hfp)
+              .unionByName(rows))
+            .mode("overwrite").parquet(tmp.toString)
+          LocalCommitStore.swapDir(tmp, srcDir)
         }
         graft.Tables.invalidate(spark, srcDir.toString)
         ok(JObj(

@@ -7,6 +7,7 @@ import org.apache.spark.sql.types.StructType
 
 import graft.embed.{BatchEmbed, Embedder}
 import graft.ingest.{Ingest, PageExtractor, TextPageExtractor}
+import graft.table.LocalFs
 
 /** Structured Streaming shapes for the reference's incremental flows
   * (SURVEY.md §2.9): the chunked-upload-then-finalize folder watch
@@ -121,10 +122,10 @@ object StreamIngest {
         val qs = df.select(col("query_id").cast("long"), col("text"))
           .collect().map(r => (r.getLong(0), r.getString(1))).toSeq
         if (qs.nonEmpty)
-          graft.index.SearchIndex.hybridBatch(spark, indexDir, qs,
-            embedder, size = k)
-            .withColumn("batch_id", lit(batchId))
-            .write.mode("append").parquet(outDir)
+          LocalFs.write(graft.index.SearchIndex.hybridBatch(spark, indexDir,
+              qs, embedder, size = k)
+            .withColumn("batch_id", lit(batchId)))
+            .mode("append").parquet(outDir)
       }
       .start()
 
@@ -169,9 +170,10 @@ object StreamIngest {
       .trigger(trigger)
       .foreachBatch { (df: org.apache.spark.sql.Dataset[
           org.apache.spark.sql.Row], batchId: Long) =>
-        graft.search.TextSearch.percolate(df, "doc_id", "text", queries)
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("append").parquet(outDir)
+        LocalFs.write(graft.search.TextSearch
+            .percolate(df, "doc_id", "text", queries)
+            .withColumn("batch_id", lit(batchId)))
+          .mode("append").parquet(outDir)
       }
       .start()
 
@@ -207,10 +209,10 @@ object StreamIngest {
             spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
             df.select(col(idCol), col(vecCol)).schema)
         if (!Files.exists(Paths.get(s"$outDir/batch_id=$batchId"))) {
-          graft.dedup.Dedup.semDedupIncremental(
+          LocalFs.write(graft.dedup.Dedup.semDedupIncremental(
               existing, df, idCol, vecCol, centroids, tau)
-            .withColumn("batch_id", lit(batchId))
-            .write.mode("append").partitionBy("batch_id").parquet(outDir)
+            .withColumn("batch_id", lit(batchId)))
+            .mode("append").partitionBy("batch_id").parquet(outDir)
         }
         // kept appends derive from the COMMITTED decisions and anti-join
         // the ids already admitted — replay-safe even if the previous
@@ -219,10 +221,10 @@ object StreamIngest {
           val keepIds = spark.read.parquet(outDir)
             .filter(col("batch_id") === batchId && col("keep"))
             .select(col("id").as(idCol))
-          df.select(col(idCol), col(vecCol))
-            .join(keepIds, Seq(idCol), "left_semi")
-            .join(existing.select(col(idCol)), Seq(idCol), "left_anti")
-            .write.mode("append").parquet(keptDir)
+          LocalFs.write(df.select(col(idCol), col(vecCol))
+              .join(keepIds, Seq(idCol), "left_semi")
+              .join(existing.select(col(idCol)), Seq(idCol), "left_anti"))
+            .mode("append").parquet(keptDir)
         }
       }
       .start()
@@ -316,14 +318,14 @@ object StreamIngest {
           org.apache.spark.sql.Row], batchId: Long) =>
         if (!java.nio.file.Files.exists(
             java.nio.file.Paths.get(s"$outDir/batch_id=$batchId"))) {
-          graft.operators.Drift
-            .psiAgainstReference(df, valueCol, edges, refProps)
-            // fail CLOSED: an empty/failed upstream feed (0 rows) or an
-            // undefined psi is an alarm, not a silent pass
-            .withColumn("alarm", col("n_rows") === 0 ||
-              col("psi").isNull || col("psi") > psiBar)
-            .withColumn("batch_id", lit(batchId))
-            .write.mode("append").partitionBy("batch_id").parquet(outDir)
+          LocalFs.write(graft.operators.Drift
+              .psiAgainstReference(df, valueCol, edges, refProps)
+              // fail CLOSED: an empty/failed upstream feed (0 rows) or an
+              // undefined psi is an alarm, not a silent pass
+              .withColumn("alarm", col("n_rows") === 0 ||
+                col("psi").isNull || col("psi") > psiBar)
+              .withColumn("batch_id", lit(batchId)))
+            .mode("append").partitionBy("batch_id").parquet(outDir)
         }
       }
       .start()

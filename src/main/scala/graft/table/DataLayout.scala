@@ -20,9 +20,9 @@ object DataLayout {
     * `nFiles` sizes output files — pick `bytes / ~512 MB` at scale. */
   def clusterWrite(df: DataFrame, dir: String, sortCols: Seq[String],
       nFiles: Int): Unit =
-    df.repartitionByRange(nFiles, sortCols.map(col): _*)
-      .sortWithinPartitions(sortCols.map(col): _*)
-      .write.mode("overwrite").parquet(dir)
+    LocalFs.write(df.repartitionByRange(nFiles, sortCols.map(col): _*)
+        .sortWithinPartitions(sortCols.map(col): _*))
+      .mode("overwrite").parquet(dir)
 
   /** Per-file (min, max) of `column` for a parquet dir — the zone map a
     * clustered layout produces. Disjoint ranges = file-level pruning. */
@@ -72,11 +72,11 @@ object DataLayout {
     val z = zInterleave(
       zNormalize(col(c1), mm.getDouble(0), mm.getDouble(1)),
       zNormalize(col(c2), mm.getDouble(2), mm.getDouble(3)))
-    df.withColumn("__z", z)
-      .repartitionByRange(nFiles, col("__z"))
-      .sortWithinPartitions("__z")
-      .drop("__z")
-      .write.mode("overwrite").parquet(dir)
+    LocalFs.write(df.withColumn("__z", z)
+        .repartitionByRange(nFiles, col("__z"))
+        .sortWithinPartitions("__z")
+        .drop("__z"))
+      .mode("overwrite").parquet(dir)
   }
 
   /** Bucketed catalog table for CO-LOCATED joins: rows hash-partitioned

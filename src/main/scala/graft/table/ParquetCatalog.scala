@@ -29,9 +29,9 @@ final case class ParquetCatalog(spark: SparkSession, baseDir: String,
   def createTable(name: String, schema: StructType): Unit = {
     validate(name)
     if (!tableExists(name))
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-        .write.parquet(dir(name))
+      LocalFs.write(spark.createDataFrame(
+        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema))
+        .parquet(dir(name))
   }
 
   /** D2 — DROP TABLE IF EXISTS. */
@@ -75,7 +75,7 @@ final case class ParquetCatalog(spark: SparkSession, baseDir: String,
     * are the commit unit, mirroring per-chunk commit isolation). */
   def insert(name: String, df: DataFrame): Unit = {
     validate(name)
-    df.write.mode(SaveMode.Append).parquet(dir(name))
+    LocalFs.write(df).mode(SaveMode.Append).parquet(dir(name))
   }
 
   /** S7 — CSV ingest: header row, nulls → "" on string columns
@@ -124,7 +124,7 @@ final case class ParquetCatalog(spark: SparkSession, baseDir: String,
       .filter(!col(idCol).isInCollection(ids))
       .observe(kept, count(lit(1)).as("n"))
     val tmp = dir(name) + "__tmp_delete"
-    rewritten.write.mode(SaveMode.Overwrite).parquet(tmp)
+    LocalFs.write(rewritten).mode(SaveMode.Overwrite).parquet(tmp)
     swapIn(tmp, dir(name))
     metric(all) - metric(kept)
   }
@@ -148,7 +148,7 @@ final case class ParquetCatalog(spark: SparkSession, baseDir: String,
     val merged    = kept.unionByName(
       incoming.observe(inObs, count(lit(1)).as("n")))
     val tmp = dir(name) + "__tmp_upsert"
-    merged.write.mode(SaveMode.Overwrite).parquet(tmp)
+    LocalFs.write(merged).mode(SaveMode.Overwrite).parquet(tmp)
     swapIn(tmp, dir(name))
     val updated = metric(beforeObs) - metric(keptObs)
     (updated, metric(inObs) - updated)
@@ -177,8 +177,8 @@ final case class ParquetCatalog(spark: SparkSession, baseDir: String,
     val bytes  = before.map(Files.size).sum
     val nOut   = math.max(1L, (bytes + targetFileBytes - 1) / targetFileBytes)
     val tmp    = dir(name) + "__tmp_compact"
-    table(name).repartition(nOut.toInt)
-      .write.mode(SaveMode.Overwrite).parquet(tmp)
+    LocalFs.write(table(name).repartition(nOut.toInt))
+      .mode(SaveMode.Overwrite).parquet(tmp)
     swapIn(tmp, dir(name))
     (before.length.toLong, parquetFiles.length.toLong)
   }

@@ -61,7 +61,7 @@ final case class SnapshotCatalog(spark: SparkSession, baseDir: String,
     * torn table. */
   def write(name: String, df: DataFrame): Long = {
     val next = versions(name).lastOption.getOrElse(0L) + 1L
-    df.write.parquet(vdir(name, next).toString)
+    LocalFs.write(df).parquet(vdir(name, next).toString)
     commitPointer(name, next)
     next
   }
@@ -83,7 +83,7 @@ final case class SnapshotCatalog(spark: SparkSession, baseDir: String,
     val t = tdir(name)
     Files.createDirectories(t)
     val staged = t.resolve(".stage-" + java.util.UUID.randomUUID())
-    df.write.parquet(staged.toString)
+    LocalFs.write(df).parquet(staged.toString)
     val lock = t.resolve("_COMMIT_LOCK")
     val acquired =
       try { Files.createFile(lock); true }
@@ -175,7 +175,7 @@ final case class SnapshotCatalog(spark: SparkSession, baseDir: String,
         commitPointer(name, v); v
       case None =>
         val next = versions(name).lastOption.getOrElse(0L) + 1L
-        df.write.parquet(vdir(name, next).toString)
+        LocalFs.write(df).parquet(vdir(name, next).toString)
         Files.write(vdir(name, next).resolve("_TAG"),
           tag.getBytes(StandardCharsets.UTF_8))
         commitPointer(name, next)

@@ -290,6 +290,32 @@ class ServeSpec extends SparkSpec {
     assert(delete("/indices/serve_conc")._1 == 200)
   }
 
+  test("an index whose source swap crashed heals on the next read") {
+    val (_, uf) = get("/unique-filepath/serve_docs")
+    val hfp = obj(uf).arr("hashed_filepaths").get.collectFirst {
+      case JStr(s) if s.nonEmpty => s
+    }.get
+    val (c0, b0) = postJson("/index/document",
+      s"""{"index_name": "serve_heal", "table_name": "serve_docs",
+          "hashed_filepath": "$hfp"}""")
+    assert(c0 == 200, s"index failed: $b0")
+    val search = """{"index_name": "serve_heal",
+        "query_text": "page explains hello serving layer",
+        "size": 5, "min_score": 0.1}"""
+    val doc = get(s"/document/serve_heal/$hfp")
+    val hits = postJson("/search", search)
+    assert(doc._1 == 200 && hits._1 == 200)
+
+    // the state a crash between the two renames of swapDir leaves
+    val src = Paths.get(base, "indices", "serve_heal", "source")
+    Files.move(src, src.resolveSibling("source__old"))
+    assert(postJson("/search", search) == hits)
+    assert(get(s"/document/serve_heal/$hfp") == doc)
+    assert(Files.isDirectory(src) &&
+      !Files.exists(src.resolveSibling("source__old")))
+    assert(delete("/indices/serve_heal")._1 == 200)
+  }
+
   test("source reads follow every write of source: upsert, delete, re-index") {
     // one file, indexed, then re-parsed with new page text at the same
     // path (same hashed_filepath) and upserted
