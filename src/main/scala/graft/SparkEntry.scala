@@ -5081,14 +5081,11 @@ object SparkEntry {
       // — NEVER a row_number window over the corpus; the oracle uses the
       // window formulation, pinning the agg's (score desc, id asc)
       // order cross-engine.
-      (s, dir) => Tables.documents(s, dir)
-        .groupBy("source")
-        .agg(org.apache.spark.sql.graftext.TopKByScoreAgg.topKByScore(
-          col("n_chars").cast("double"), col("doc_id"), 3).as("top"))
-        .select(col("source"), posexplode(col("top")).as(Seq("rk", "t")))
-        .select(col("source"), (col("rk") + 1).cast("long").as("rk"),
-          col("t.id").as("doc_id"),
-          col("t.score").cast("long").as("hit_chars"))
+      (s, dir) => org.apache.spark.sql.graftext.TopKByScoreAgg.ranked(
+          Tables.documents(s, dir), "source", col("n_chars").cast("double"),
+          3, "hit_chars")
+        .select(col("source"), col("rank").as("rk"), col("doc_id"),
+          col("hit_chars").cast("long").as("hit_chars"))
         .orderBy("source", "rk"),
       """SELECT source, rk, doc_id, hit_chars FROM (
         |  SELECT source,

@@ -4,6 +4,7 @@ import org.apache.spark.ml.clustering.KMeans
 import org.apache.spark.ml.functions.array_to_vector
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftext.TopKByScoreAgg
 
 import graft.functions.VectorFunctions
 import graft.table.{CommitStore, LocalCommitStore, LocalFs}
@@ -293,21 +294,15 @@ object IvfIndex {
       probeCells(spark, vDir, v, nProbe).map(c => (qid, c))
     }
     val cells = probeRows.map(_._2).distinct
-    graft.Tables.loadPath(spark, s"$vDir/ivf_vectors")
-      .filter(col("ivf_cell").isin(cells: _*))
-      .join(broadcast(probeRows.toDF("query_id", "ivf_cell")), "ivf_cell")
-      .join(broadcast(queries.map { case (qid, v) => (qid, v.toSeq) }
-        .toDF("query_id", "qvec")), "query_id")
-      .select(col("query_id"), col("doc_id"),
-        round(VectorFunctions.cosine(col("embedding"), col("qvec")), 6)
-          .as("vec_score"))
-      .groupBy("query_id")
-      .agg(org.apache.spark.sql.graftext.TopKByScoreAgg.topKByScore(
-        col("vec_score"), col("doc_id"), k).as("top"))
-      .select(col("query_id"), posexplode(col("top")).as(Seq("rk", "t")))
-      .select(col("query_id"), col("t.id").as("doc_id"),
-        col("t.score").as("vec_score"),
-        (col("rk") + 1).cast("long").as("rank"))
+    TopKByScoreAgg.ranked(graft.Tables.loadPath(spark, s"$vDir/ivf_vectors")
+        .filter(col("ivf_cell").isin(cells: _*))
+        .join(broadcast(probeRows.toDF("query_id", "ivf_cell")), "ivf_cell")
+        .join(broadcast(queries.map { case (qid, v) => (qid, v.toSeq) }
+          .toDF("query_id", "qvec")), "query_id")
+        .select(col("query_id"), col("doc_id"),
+          round(VectorFunctions.cosine(col("embedding"), col("qvec")), 6)
+            .as("vec_score")),
+      "query_id", col("vec_score"), k, "vec_score")
   }
 
   /** IVF-SQ8 (the FAISS `IVF*,SQ8` shape): probe the nProbe nearest

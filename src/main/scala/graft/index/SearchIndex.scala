@@ -2,10 +2,11 @@ package graft.index
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftext.TopKByScoreAgg
 
 import graft.embed.Embedder
 import graft.functions.{TextFunctions, VectorFunctions}
-import graft.search.TextSearch
+import graft.search.{HybridSearch, TextSearch, VectorSearch}
 import graft.table.LocalFs
 
 /** Persisted search index (reference E2: RDB rows → Elasticsearch index,
@@ -85,6 +86,14 @@ object SearchIndex {
   private def cachedTable(spark: SparkSession, indexDir: String,
       name: String): DataFrame =
     graft.Tables.loadPath(spark, s"$indexDir/$name")
+
+  /** The rows of a term-bucketed table (postings, docfreq or
+    * positions) for `terms`: the scan reads only their term buckets. */
+  private def probe(spark: SparkSession, indexDir: String, table: String,
+      terms: Seq[String]): DataFrame =
+    cachedTable(spark, indexDir, table)
+      .filter(col("term_bucket").isin(terms.map(termBucketOf).distinct: _*) &&
+        col("term").isin(terms: _*))
 
   private def invalidateAll(spark: SparkSession, indexDir: String): Unit =
     Seq("postings", "positions", "docfreq", "stats", "vectors")
@@ -301,8 +310,7 @@ object SearchIndex {
   def fuzzyExpandTerms(spark: SparkSession, indexDir: String,
       query: String, maxEdits: Int = 1): Seq[String] = {
     import spark.implicits._
-    val qTerms = query.toLowerCase.split("[^a-z0-9]+").filter(_.nonEmpty)
-      .distinct.toSeq
+    val qTerms = TextSearch.queryTerms(query).toSeq
     if (qTerms.isEmpty) return Nil
     val qdf = qTerms.toDF("qterm")
     cachedTable(spark, indexDir, "docfreq")
@@ -379,11 +387,7 @@ object SearchIndex {
     // then needs all |fixed|+1 slots filled, any expansion satisfying
     // the last one (exactly ES's per-position term set).
     val pairs = fixed.zipWithIndex ++ exp.map(t => (t, fixed.length))
-    val allTerms = pairs.map(_._1).distinct
-    val buckets = allTerms.map(termBucketOf).distinct
-    val pp = cachedTable(spark, indexDir, "positions")
-      .filter(col("term_bucket").isin(buckets: _*) &&
-        col("term").isin(allTerms: _*))
+    val pp = probe(spark, indexDir, "positions", pairs.map(_._1).distinct)
       .select("doc_id", "pos", "term")
     val ph = pairs.toDF("term", "idx")
     pp.join(broadcast(ph), "term")
@@ -405,9 +409,7 @@ object SearchIndex {
     * terms with positive lift. */
   def significantTerms(spark: SparkSession, indexDir: String,
       docs: DataFrame, fgTerm: String, topN: Int = 10): DataFrame = {
-    val fgIds = cachedTable(spark, indexDir, "postings")
-      .filter(col("term_bucket") === termBucketOf(fgTerm) &&
-        col("term") === fgTerm)
+    val fgIds = probe(spark, indexDir, "postings", Seq(fgTerm))
       .select("doc_id")
     // fgToks feeds BOTH the per-term counts and the foreground size —
     // materialize once (it is |foreground|-scale) so the corpus scan
@@ -450,10 +452,7 @@ object SearchIndex {
       .groupBy("term").agg(count(lit(1)).as("tf"))
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     require(seedTf.nonEmpty, s"seed doc $seedDocId missing or empty")
-    val buckets = seedTf.keys.map(termBucketOf).toSeq.distinct
-    val dfMap = cachedTable(spark, indexDir, "docfreq")
-      .filter(col("term_bucket").isin(buckets: _*) &&
-        col("term").isin(seedTf.keys.toSeq: _*))
+    val dfMap = probe(spark, indexDir, "docfreq", seedTf.keys.toSeq)
       .select("term", "df")
       .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
     val n = cachedTable(spark, indexDir, "stats")
@@ -514,8 +513,7 @@ object SearchIndex {
   def boolSearch(spark: SparkSession, indexDir: String,
       must: Seq[String], should: Seq[String] = Nil,
       mustNot: Seq[String] = Nil, filterTerms: Seq[String] = Nil,
-      minimumShouldMatch: Int = 0, size: Int = 10,
-      k1: Double = 1.2, b: Double = 0.75): DataFrame = {
+      minimumShouldMatch: Int = 0, size: Int = 10): DataFrame = {
     val mustD    = must.map(_.toLowerCase).distinct
     val shouldD  = should.map(_.toLowerCase).distinct
     val notD     = mustNot.map(_.toLowerCase).distinct
@@ -523,31 +521,15 @@ object SearchIndex {
     val scoring  = (mustD ++ shouldD).distinct
     val allTerms = (scoring ++ notD ++ filterD).distinct
     require(allTerms.nonEmpty, "bool query needs at least one term")
-    val buckets = allTerms.map(termBucketOf).distinct
-
-    val postings = cachedTable(spark, indexDir, "postings")
-      .filter(col("term_bucket").isin(buckets: _*) &&
-        col("term").isin(allTerms: _*))
-    // dictionary rows only for the SCORING terms: filter/must_not
-    // clauses never contribute idf (ES filter context)
-    val dfreq = cachedTable(spark, indexDir, "docfreq")
-      .filter(col("term_bucket").isin(buckets: _*) &&
-        col("term").isin(scoring: _*))
-    val stats = cachedTable(spark, indexDir, "stats")
 
     def matched(ts: Seq[String]) =
       if (ts.isEmpty) lit(0L)
       else countDistinct(when(col("term").isin(ts: _*), col("term")))
 
-    postings
-      .join(broadcast(dfreq.select("term", "df")), Seq("term"), "left")
-      .crossJoin(broadcast(stats))
-      .withColumn("term_score", when(col("df").isNotNull,
-        log(lit(1.0) + (col("n_docs") - col("df") + 0.5) / (col("df") + 0.5)) *
-          col("tf") * (k1 + 1.0) /
-          (col("tf") + lit(k1) *
-            (lit(1.0 - b) + lit(b) * col("dl") / col("avgdl"))))
-        .otherwise(lit(0.0)))
+    // dictionary rows only for the SCORING terms: filter/must_not
+    // clauses never contribute idf (ES filter context)
+    termScores(spark, indexDir, probe(spark, indexDir, "postings", allTerms),
+        scoring, "left")
       .groupBy("doc_id")
       .agg(sum("term_score").as("raw"),
         matched(mustD).as("n_must"), matched(shouldD).as("n_should"),
@@ -584,32 +566,15 @@ object SearchIndex {
   def disMax(spark: SparkSession, indexDir: String,
       clauses: Seq[Seq[String]], tieBreaker: Double,
       negative: Seq[String] = Nil, negativeBoost: Double = 1.0,
-      size: Int = 10, k1: Double = 1.2, b: Double = 0.75): DataFrame = {
+      size: Int = 10): DataFrame = {
     require(clauses.nonEmpty, "dis_max needs at least one clause")
     val cls = clauses.map(_.map(_.toLowerCase).distinct)
     val negD = negative.map(_.toLowerCase).distinct
     val scoring = cls.flatten.distinct
-    val allTerms = (scoring ++ negD).distinct
-    val buckets = allTerms.map(termBucketOf).distinct
-
-    val postings = cachedTable(spark, indexDir, "postings")
-      .filter(col("term_bucket").isin(buckets: _*) &&
-        col("term").isin(allTerms: _*))
     // negative terms are demotion signals, not scoring terms — no idf
-    val dfreq = cachedTable(spark, indexDir, "docfreq")
-      .filter(col("term_bucket").isin(buckets: _*) &&
-        col("term").isin(scoring: _*))
-    val stats = cachedTable(spark, indexDir, "stats")
-
-    val scored = postings
-      .join(broadcast(dfreq.select("term", "df")), Seq("term"), "left")
-      .crossJoin(broadcast(stats))
-      .withColumn("term_score", when(col("df").isNotNull,
-        log(lit(1.0) + (col("n_docs") - col("df") + 0.5) / (col("df") + 0.5)) *
-          col("tf") * (k1 + 1.0) /
-          (col("tf") + lit(k1) *
-            (lit(1.0 - b) + lit(b) * col("dl") / col("avgdl"))))
-        .otherwise(lit(0.0)))
+    val scored = termScores(spark, indexDir,
+      probe(spark, indexDir, "postings", (scoring ++ negD).distinct),
+      scoring, "left")
 
     val clauseSums = cls.zipWithIndex.map { case (ts, i) =>
       coalesce(sum(when(col("term").isin(ts: _*), col("term_score"))),
@@ -641,13 +606,10 @@ object SearchIndex {
     * [[phrase]] vs `TextSearch.phraseMatch`). */
   def proximity(spark: SparkSession, indexDir: String, query: String,
       slop: Int): DataFrame = {
-    val terms = query.toLowerCase.split("[^a-z0-9]+").filter(_.nonEmpty).distinct
+    val terms = TextSearch.queryTerms(query)
     require(terms.nonEmpty, "proximity needs at least one term")
-    val buckets = terms.map(termBucketOf).distinct.toSeq
     TextSearch.proximityAlign(
-      cachedTable(spark, indexDir, "positions")
-        .filter(col("term_bucket").isin(buckets: _*) &&
-          col("term").isin(terms.toSeq: _*))
+      probe(spark, indexDir, "positions", terms.toSeq)
         .select("doc_id", "pos", "term"),
       terms, slop)
   }
@@ -687,34 +649,22 @@ object SearchIndex {
     * (partition pruning on `term_bucket`), never re-tokenizes the corpus.
     * No driver-side count()/head() at query time — stats are a 1-row
     * broadcast relation. */
-  def bm25(spark: SparkSession, indexDir: String, query: String,
-      k1: Double = 1.2, b: Double = 0.75): DataFrame = {
-    val qTerms = query.toLowerCase.split("[^a-z0-9]+").filter(_.nonEmpty).distinct
-    val buckets = qTerms.map(termBucketOf).distinct.toSeq
-
-    val postings = cachedTable(spark, indexDir, "postings")
-      .filter(col("term_bucket").isin(buckets: _*) &&
-        col("term").isin(qTerms.toSeq: _*))
-    val dfreq = cachedTable(spark, indexDir, "docfreq")
-      .filter(col("term_bucket").isin(buckets: _*) &&
-        col("term").isin(qTerms.toSeq: _*))
-    val stats = cachedTable(spark, indexDir, "stats")
-
-    postings
-      .join(broadcast(dfreq.select("term", "df")), "term")
-      .crossJoin(broadcast(stats))
-      .withColumn("idf",
-        log(lit(1.0) + (col("n_docs") - col("df") + 0.5) / (col("df") + 0.5)))
-      .withColumn("term_score",
-        col("idf") * col("tf") * (k1 + 1.0) /
-          (col("tf") + lit(k1) *
-            (lit(1.0 - b) + lit(b) * col("dl") / col("avgdl"))))
+  def bm25(spark: SparkSession, indexDir: String, query: String): DataFrame = {
+    val terms = TextSearch.queryTerms(query).toSeq
+    termScores(spark, indexDir, probe(spark, indexDir, "postings", terms),
+        terms)
       .groupBy("doc_id")
       .agg(sum("term_score").as("text_score"))
   }
 
-  /** ANN over the prebuilt vector index: partition-pruned bucket probe
-    * then exact cosine within candidates. */
+  /** [[TextSearch.bm25Terms]] of `postings` against the index's stats
+    * row and the dictionary rows of the `scoring` terms. */
+  private def termScores(spark: SparkSession, indexDir: String,
+      postings: DataFrame, scoring: Seq[String],
+      joinType: String = "inner"): DataFrame =
+    TextSearch.bm25Terms(postings, probe(spark, indexDir, "docfreq", scoring),
+      Seq(cachedTable(spark, indexDir, "stats")), joinType)
+
   /** Phrase query over the persisted positional postings (ES
     * `match_phrase` on the index): the scan is pruned to the phrase's
     * term buckets (partition pruning) and terms, then the same
@@ -723,20 +673,18 @@ object SearchIndex {
   def phrase(spark: SparkSession, indexDir: String,
       phraseText: String): DataFrame = {
     val terms = TextSearch.phraseTerms(phraseText)
-    val buckets = terms.map(termBucketOf).distinct.toSeq
     TextSearch.phraseAlign(
-      cachedTable(spark, indexDir, "positions")
-        .filter(col("term_bucket").isin(buckets: _*) &&
-          col("term").isin(terms.distinct.toSeq: _*))
+      probe(spark, indexDir, "positions", terms.distinct.toSeq)
         .select("doc_id", "pos", "term"),
       terms)
   }
 
+  /** ANN over the prebuilt vector index: partition-pruned bucket probe
+    * then exact cosine within candidates. */
   def knn(spark: SparkSession, indexDir: String, queryVec: Array[Float],
       k: Int, dim: Int = 64, probeHammingRadius: Int = 1): DataFrame = {
-    val qSig = graft.search.VectorSearch.querySignature(queryVec, dim, LshBits)
-    val probes = (0L until (1L << LshBits))
-      .filter(bkt => java.lang.Long.bitCount(bkt ^ qSig) <= probeHammingRadius)
+    val probes = VectorSearch.probeBall(queryVec, dim, LshBits,
+      probeHammingRadius)
     val cands = cachedTable(spark, indexDir, "vectors")
       .filter(col("lsh_bucket").isin(probes: _*))
     cands.select(col("doc_id"),
@@ -762,55 +710,30 @@ object SearchIndex {
     * query by (score DESC, doc_id ASC).
     */
   def bm25Batch(spark: SparkSession, indexDir: String,
-      queries: Seq[(Long, String)], k: Int,
-      k1: Double = 1.2, b: Double = 0.75): DataFrame =
-    bm25BatchScores(spark, indexDir, queries, k1, b)
-      // round BEFORE ranking: ordering on the rounded score (doc_id
-      // tiebreak) is reproducible across engines; raw-double ordering
-      // is not (summation-order FP noise can flip near-ties)
-      .withColumn("text_score", round(col("text_score"), 6))
-      .groupBy("query_id")
-      .agg(org.apache.spark.sql.graftext.TopKByScoreAgg.topKByScore(
-        col("text_score"), col("doc_id"), k).as("top"))
-      .select(col("query_id"), posexplode(col("top")).as(Seq("rk", "t")))
-      .select(col("query_id"), col("t.id").as("doc_id"),
-        col("t.score").as("text_score"),
-        (col("rk") + 1).cast("long").as("rank"))
+      queries: Seq[(Long, String)], k: Int): DataFrame =
+    TopKByScoreAgg.ranked(bm25BatchScores(spark, indexDir, queries)
+        // round BEFORE ranking: ordering on the rounded score (doc_id
+        // tiebreak) is reproducible across engines; raw-double ordering
+        // is not (summation-order FP noise can flip near-ties)
+        .withColumn("text_score", round(col("text_score"), 6)),
+      "query_id", col("text_score"), k, "text_score")
 
   /** The scoring core of [[bm25Batch]]: every (query_id, doc_id) pair's
     * RAW BM25 sum, un-rounded and un-ranked — [[hybridBatch]] fuses
     * these with vector scores exactly the way single-query [[hybrid]]
     * consumes [[bm25]] (raw text side, rounding at fuse time). */
   private def bm25BatchScores(spark: SparkSession, indexDir: String,
-      queries: Seq[(Long, String)],
-      k1: Double = 1.2, b: Double = 0.75): DataFrame = {
+      queries: Seq[(Long, String)]): DataFrame = {
     import spark.implicits._
     val qTerms = queries.flatMap { case (qid, text) =>
-      text.toLowerCase.split("[^a-z0-9]+").filter(_.nonEmpty).distinct
-        .map(t => (qid, t))
+      TextSearch.queryTerms(text).map(t => (qid, t))
     }
-    val allTerms = qTerms.map(_._2).distinct
-    val buckets = allTerms.map(termBucketOf).distinct
-
-    val postings = cachedTable(spark, indexDir, "postings")
-      .filter(col("term_bucket").isin(buckets: _*) &&
-        col("term").isin(allTerms: _*))
-    val dfreq = cachedTable(spark, indexDir, "docfreq")
-      .filter(col("term_bucket").isin(buckets: _*) &&
-        col("term").isin(allTerms: _*))
-    val stats = cachedTable(spark, indexDir, "stats")
-
-    postings
-      // fan out each posting to every query containing its term
-      .join(broadcast(qTerms.toDF("query_id", "term")), "term")
-      .join(broadcast(dfreq.select("term", "df")), "term")
-      .crossJoin(broadcast(stats))
-      .withColumn("idf",
-        log(lit(1.0) + (col("n_docs") - col("df") + 0.5) / (col("df") + 0.5)))
-      .withColumn("term_score",
-        col("idf") * col("tf") * (k1 + 1.0) /
-          (col("tf") + lit(k1) *
-            (lit(1.0 - b) + lit(b) * col("dl") / col("avgdl"))))
+    val terms = qTerms.map(_._2).distinct
+    termScores(spark, indexDir,
+        probe(spark, indexDir, "postings", terms)
+          // fan out each posting to every query containing its term
+          .join(broadcast(qTerms.toDF("query_id", "term")), "term"),
+        terms)
       .groupBy("query_id", "doc_id")
       .agg(sum("term_score").as("text_score"))
   }
@@ -826,47 +749,33 @@ object SearchIndex {
       probeHammingRadius: Int = 1): DataFrame = {
     import spark.implicits._
     val probeRows = queries.flatMap { case (qid, v) =>
-      val sig = graft.search.VectorSearch.querySignature(v, dim, LshBits)
-      (0L until (1L << LshBits))
-        .filter(bkt => java.lang.Long.bitCount(bkt ^ sig) <= probeHammingRadius)
+      VectorSearch.probeBall(v, dim, LshBits, probeHammingRadius)
         .map(bkt => (qid, bkt))
     }
     val buckets = probeRows.map(_._2).distinct
-
-    cachedTable(spark, indexDir, "vectors")
-      .filter(col("lsh_bucket").isin(buckets: _*))
-      .join(broadcast(probeRows.toDF("query_id", "lsh_bucket")), "lsh_bucket")
-      .join(broadcast(queries.map { case (qid, v) => (qid, v.toSeq) }
-        .toDF("query_id", "qvec")), "query_id")
-      .select(col("query_id"), col("doc_id"),
-        round(VectorFunctions.cosine(col("embedding"), col("qvec")), 6)
-          .as("vec_score"))
-      .groupBy("query_id")
-      .agg(org.apache.spark.sql.graftext.TopKByScoreAgg.topKByScore(
-        col("vec_score"), col("doc_id"), k).as("top"))
-      .select(col("query_id"), posexplode(col("top")).as(Seq("rk", "t")))
-      .select(col("query_id"), col("t.id").as("doc_id"),
-        col("t.score").as("vec_score"),
-        (col("rk") + 1).cast("long").as("rank"))
+    TopKByScoreAgg.ranked(cachedTable(spark, indexDir, "vectors")
+        .filter(col("lsh_bucket").isin(buckets: _*))
+        .join(broadcast(probeRows.toDF("query_id", "lsh_bucket")), "lsh_bucket")
+        .join(broadcast(queries.map { case (qid, v) => (qid, v.toSeq) }
+          .toDF("query_id", "qvec")), "query_id")
+        .select(col("query_id"), col("doc_id"),
+          round(VectorFunctions.cosine(col("embedding"), col("qvec")), 6)
+            .as("vec_score")),
+      "query_id", col("vec_score"), k, "vec_score")
   }
 
   /** Hybrid search over the prebuilt index (reference Q3 semantics:
-    * boosts 1.0/0.8, min_score, top-k). */
+    * the [[HybridSearch.fuse]] boosts, min_score, top-k). */
   def hybrid(spark: SparkSession, indexDir: String, query: String,
-      embedder: Embedder, size: Int = 10, minScore: Double = 0.5,
-      textBoost: Double = 1.0, vectorBoost: Double = 0.8,
-      probeHammingRadius: Int = 2): DataFrame = {
-    val text = bm25(spark, indexDir, query)
-    val vec  = knn(spark, indexDir, embedder.embed(query),
-      math.max(size * 10, 50), embedder.dim, probeHammingRadius)
-    text.join(vec, Seq("doc_id"), "full_outer")
-      .select(col("doc_id"),
-        round(coalesce(col("text_score"), lit(0.0)) * textBoost +
-          coalesce(col("vec_score"), lit(0.0)) * vectorBoost, 6).as("score"))
-      .filter(col("score") >= minScore)
+      embedder: Embedder, size: Int = HybridSearch.DefaultSize,
+      minScore: Double = HybridSearch.DefaultMinScore,
+      probeHammingRadius: Int = 2): DataFrame =
+    HybridSearch.fuse(bm25(spark, indexDir, query),
+        knn(spark, indexDir, embedder.embed(query),
+          HybridSearch.numCandidates(size), embedder.dim, probeHammingRadius),
+        Seq("doc_id"), minScore)
       .orderBy(col("score").desc, col("doc_id").asc)
       .limit(size)
-  }
 
   /** Batch hybrid: N queries fused in ONE pass over both index legs —
     * the batch composition of [[bm25Batch]]'s text scores (raw, like
@@ -876,26 +785,17 @@ object SearchIndex {
     * the k-bounded aggregate, never a window over the fused set.
     * Result ≡ running [[hybrid]] once per query (SearchIndexSpec). */
   def hybridBatch(spark: SparkSession, indexDir: String,
-      queries: Seq[(Long, String)], embedder: Embedder, size: Int = 10,
-      minScore: Double = 0.5, textBoost: Double = 1.0,
-      vectorBoost: Double = 0.8, probeHammingRadius: Int = 2): DataFrame = {
-    val nCand = math.max(size * 10, 50)
-    val text = bm25BatchScores(spark, indexDir, queries)
+      queries: Seq[(Long, String)], embedder: Embedder,
+      size: Int = HybridSearch.DefaultSize,
+      minScore: Double = HybridSearch.DefaultMinScore,
+      probeHammingRadius: Int = 2): DataFrame = {
     val vec = knnBatch(spark, indexDir,
       queries.map { case (qid, t) => qid -> embedder.embed(t) },
-      nCand, embedder.dim, probeHammingRadius)
+      HybridSearch.numCandidates(size), embedder.dim, probeHammingRadius)
       .select(col("query_id"), col("doc_id"), col("vec_score"))
-    text.join(vec, Seq("query_id", "doc_id"), "full_outer")
-      .select(col("query_id"), col("doc_id"),
-        round(coalesce(col("text_score"), lit(0.0)) * textBoost +
-          coalesce(col("vec_score"), lit(0.0)) * vectorBoost, 6).as("score"))
-      .filter(col("score") >= minScore)
-      .groupBy("query_id")
-      .agg(org.apache.spark.sql.graftext.TopKByScoreAgg.topKByScore(
-        col("score"), col("doc_id"), size).as("top"))
-      .select(col("query_id"), posexplode(col("top")).as(Seq("rk", "t")))
-      .select(col("query_id"), col("t.id").as("doc_id"),
-        col("t.score").as("score"),
-        (col("rk") + 1).cast("long").as("rank"))
+    TopKByScoreAgg.ranked(
+      HybridSearch.fuse(bm25BatchScores(spark, indexDir, queries), vec,
+        Seq("query_id", "doc_id"), minScore),
+      "query_id", col("score"), size, "score")
   }
 }

@@ -4,7 +4,6 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.embed.Embedder
-import graft.functions.VectorFunctions
 
 /** Hybrid BM25 + kNN fusion (reference Q3, the flagship query path E3:
   * boosted `bool.should` of a text `match` (boost 1.0) and a `knn` clause
@@ -28,6 +27,19 @@ object HybridSearch {
   val VectorBoost     = 0.8
   def numCandidates(size: Int): Int = math.max(size * 10, 50)
 
+  /** The boosted `bool.should` score: the text (`text_score`) and
+    * vector (`vec_score`) legs full-outer joined on `keys`, a missing
+    * leg scoring 0, `TextBoost·text + VectorBoost·vec` rounded to 6 dp
+    * and kept at `>= minScore`. Returns (keys..., score). */
+  private[graft] def fuse(text: DataFrame, vec: DataFrame,
+      keys: Seq[String], minScore: Double): DataFrame =
+    text.join(vec, keys, "full_outer")
+      .select(keys.map(col) :+
+        round(coalesce(col("text_score"), lit(0.0)) * TextBoost +
+          coalesce(col("vec_score"), lit(0.0)) * VectorBoost, 6)
+          .as("score"): _*)
+      .filter(col("score") >= minScore)
+
   /** Full hybrid search over a doc table and its embedding table
     * (join key convention: doc_id == vec_id, FIXTURES.md §A).
     * Query text is embedded with the supplied embedder (Q6) — same stage
@@ -35,8 +47,7 @@ object HybridSearch {
     */
   def search(docs: DataFrame, embs: DataFrame, queryText: String,
       embedder: Embedder, size: Int = DefaultSize,
-      minScore: Double = DefaultMinScore, textBoost: Double = TextBoost,
-      vectorBoost: Double = VectorBoost): DataFrame = {
+      minScore: Double = DefaultMinScore): DataFrame = {
     val queryVec = embedder.embed(queryText)
     val text = docs.select(col("doc_id"),
       round(TextSearch.tokenOverlapScore(col("text"), queryText), 6)
@@ -46,11 +57,7 @@ object HybridSearch {
       embs.withColumnRenamed("vec_id", "doc_id"), "doc_id", "embedding",
       queryVec, numCandidates(size))
 
-    val fused = text.join(vec, Seq("doc_id"), "full_outer")
-      .select(col("doc_id"),
-        round(coalesce(col("text_score"), lit(0.0)) * textBoost +
-          coalesce(col("vec_score"), lit(0.0)) * vectorBoost, 6).as("score"))
-      .filter(col("score") >= minScore)
+    val fused = fuse(text, vec, Seq("doc_id"), minScore)
       .orderBy(col("score").desc, col("doc_id").asc)
       .limit(size)
 

@@ -32,13 +32,46 @@ object TextSearch {
       .agg(count(lit(1)).cast("double").as("tf"))
   }
 
+  /** Lucene's BM25 parameters (the ES `BM25` similarity defaults):
+    * term-frequency saturation and length normalization. */
+  private val K1 = 1.2
+  private val B  = 0.75
+
+  /** A query's distinct terms in first-occurrence order (lower-cased,
+    * split on non-alphanumerics — the [[TextFunctions.tokens]] rule). */
+  private[graft] def queryTerms(query: String): Array[String] =
+    tokensOf(query).distinct
+
+  private def tokensOf(text: String): Array[String] =
+    text.toLowerCase.split("[^a-z0-9]+").filter(_.nonEmpty)
+
+  /** Lucene idf over `n_docs` and `df` columns:
+    * ln(1 + (N - df + 0.5)/(df + 0.5)). */
+  private val idf: Column =
+    log(lit(1.0) + (col("n_docs") - col("df") + 0.5) / (col("df") + 0.5))
+
+  /** The BM25 term score of every search path: each posting (term,
+    * doc_id, tf, dl, ...) joined by `joinType` to the dictionary `dfreq`
+    * (term, df) and crossed with the 1-row corpus `stats` (n_docs,
+    * avgdl; one relation or one per column), all broadcast, gains a
+    * `term_score`. Under a left join, a posting whose term has no df
+    * (an unscored clause term) scores 0. */
+  private[graft] def bm25Terms(postings: DataFrame, dfreq: DataFrame,
+      stats: Seq[DataFrame], joinType: String = "inner"): DataFrame = {
+    val score = idf * col("tf") * (K1 + 1.0) /
+      (col("tf") + lit(K1) * (lit(1.0 - B) + lit(B) * col("dl") / col("avgdl")))
+    stats.foldLeft(postings.join(broadcast(dfreq.select("term", "df")),
+        Seq("term"), joinType))((p, s) => p.crossJoin(broadcast(s)))
+      .withColumn("term_score", if (joinType != "left") score
+        else when(col("df").isNotNull, score).otherwise(lit(0.0)))
+  }
+
   /** Lucene-style BM25 scores for one query string; returns
-    * (doc_id, text_score). k1/b are the standard defaults.
-    */
-  def bm25(docs: DataFrame, idCol: String, textCol: String, query: String,
-      k1: Double = 1.2, b: Double = 0.75): DataFrame =
+    * (doc_id, text_score). */
+  def bm25(docs: DataFrame, idCol: String, textCol: String,
+      query: String): DataFrame =
     bm25FromPostings(buildPostings(docs, idCol, textCol),
-      docs.agg(count(lit(1)).cast("double").as("n_docs")), query, k1, b)
+      docs.agg(count(lit(1)).cast("double").as("n_docs")), query)
 
   /** [[bm25]] over a PREBUILT postings relation — the reuse seam for
     * operators that score the same corpus more than once (PRF, batch
@@ -47,8 +80,8 @@ object TextSearch {
     * corpus-count relation (N counts ALL docs, not just those with
     * postings — matching the oracle). */
   def bm25FromPostings(postings: DataFrame, nDocs: DataFrame,
-      query: String, k1: Double = 1.2, b: Double = 0.75): DataFrame = {
-    val qTerms = query.toLowerCase.split("[^a-z0-9]+").filter(_.nonEmpty).distinct
+      query: String): DataFrame = {
+    val qTerms = queryTerms(query)
 
     // Corpus stats stay INSIDE the plan as broadcast 1-row relations —
     // no count()/head() driver actions at query time, so composing bm25
@@ -60,17 +93,8 @@ object TextSearch {
     val dfStats = postings.filter(col("term").isin(qTerms: _*))
       .groupBy("term").agg(countDistinct("doc_id").cast("double").as("df"))
 
-    postings.filter(col("term").isin(qTerms: _*))
-      .join(broadcast(dfStats), "term")
-      .crossJoin(broadcast(nDocs))
-      .crossJoin(broadcast(avgDl))
-      // idf_Lucene = ln(1 + (N - df + 0.5)/(df + 0.5))
-      .withColumn("idf",
-        log(lit(1.0) + (col("n_docs") - col("df") + 0.5) / (col("df") + 0.5)))
-      .withColumn("term_score",
-        col("idf") * col("tf") * (k1 + 1.0) /
-          (col("tf") + lit(k1) *
-            (lit(1.0 - b) + lit(b) * col("dl") / col("avgdl"))))
+    bm25Terms(postings.filter(col("term").isin(qTerms: _*)), dfStats,
+        Seq(nDocs, avgDl))
       .groupBy("doc_id")
       .agg(sum("term_score").as("text_score"))
   }
@@ -89,8 +113,7 @@ object TextSearch {
       query: String, fbDocs: Int = 10, expandK: Int = 3,
       topK: Int = 10): DataFrame = {
     require(fbDocs >= 1 && expandK >= 1 && topK >= 1)
-    val qTerms = query.toLowerCase.split("[^a-z0-9]+")
-      .filter(_.nonEmpty).distinct
+    val qTerms = queryTerms(query)
     // ONE tokenizer pass serves all three posting consumers (base
     // scoring, feedback tf, corpus df) AND the expanded rescore; lazy
     // checkpoint — the expansion-term collect below materializes it
@@ -111,9 +134,7 @@ object TextSearch {
       .agg(countDistinct("doc_id").cast("double").as("df"))
     val exp = cand.join(dfStats, "term").crossJoin(broadcast(nDocs))
       .select(col("term"),
-        round(col("fbtf") * log(lit(1.0) +
-          (col("n_docs") - col("df") + 0.5) / (col("df") + 0.5)), 6)
-          .as("w"))
+        round(col("fbtf") * idf, 6).as("w"))
       .orderBy(col("w").desc, col("term").asc).limit(expandK)
       .collect().map(_.getString(0)) // expandK strings — metadata
     bm25FromPostings(postings, nDocs, (qTerms ++ exp).mkString(" "))
@@ -126,7 +147,7 @@ object TextSearch {
   /** Simple token-overlap relevance (v1 of Q1): |distinct doc tokens ∩
     * query tokens| / |query tokens|. Cheap, shuffle-free scoring pass. */
   def tokenOverlapScore(textCol: Column, query: String): Column = {
-    val qTerms = query.toLowerCase.split("[^a-z0-9]+").filter(_.nonEmpty).distinct
+    val qTerms = queryTerms(query)
     size(array_intersect(TextFunctions.tokens(textCol),
       typedLit(qTerms))).cast("double") / qTerms.length.toDouble
   }
@@ -162,7 +183,7 @@ object TextSearch {
 
   /** Phrase token sequence (empty-token-free, order preserved). */
   def phraseTerms(phrase: String): Array[String] = {
-    val t = phrase.toLowerCase.split("[^a-z0-9]+").filter(_.nonEmpty)
+    val t = tokensOf(phrase)
     require(t.nonEmpty, "phrase must contain at least one token")
     t
   }
@@ -192,7 +213,7 @@ object TextSearch {
     * each join shuffles only term-pruned postings. */
   def proximityMatch(docs: DataFrame, idCol: String, textCol: String,
       query: String, slop: Int): DataFrame = {
-    val terms = query.toLowerCase.split("[^a-z0-9]+").filter(_.nonEmpty).distinct
+    val terms = queryTerms(query)
     require(terms.nonEmpty, "proximityMatch needs at least one term")
     proximityAlign(positionalPostings(docs, idCol, textCol)
       .filter(col("term").isin(terms.toSeq: _*)), terms, slop)
@@ -231,7 +252,7 @@ object TextSearch {
       queries: Seq[(Long, String)]): DataFrame = {
     import docs.sparkSession.implicits._
     val qRows = queries.flatMap { case (qid, text) =>
-      val ts = text.toLowerCase.split("[^a-z0-9]+").filter(_.nonEmpty).distinct
+      val ts = queryTerms(text)
       ts.map(t => (qid, t, ts.length))
     }
     require(qRows.nonEmpty, "percolate needs at least one non-empty query")

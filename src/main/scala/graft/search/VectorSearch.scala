@@ -60,12 +60,19 @@ object VectorSearch {
   def annTopK(embs: DataFrame, idCol: String, vecCol: String,
       queryVec: Array[Float], k: Int, dim: Int, nBits: Int = 8,
       probeHammingRadius: Int = 1, seed: Long = 42L): DataFrame = {
-    val bucketed = withLshBucket(embs, vecCol, dim, nBits, seed)
-    val qSig = querySignature(queryVec, dim, nBits, seed)
-    val probes = (0L until (1L << nBits))
-      .filter(b => java.lang.Long.bitCount(b ^ qSig) <= probeHammingRadius)
-    topK(bucketed.filter(col("lsh_bucket").isin(probes: _*)),
+    val probes = probeBall(queryVec, dim, nBits, probeHammingRadius, seed)
+    topK(withLshBucket(embs, vecCol, dim, nBits, seed)
+        .filter(col("lsh_bucket").isin(probes: _*)),
       idCol, vecCol, queryVec, k)
+  }
+
+  /** The LSH buckets an ANN query probes: every `nBits`-bit signature
+    * within Hamming distance `radius` of the query vector's own. */
+  private[graft] def probeBall(queryVec: Array[Float], dim: Int,
+      nBits: Int, radius: Int, seed: Long = 42L): Seq[Long] = {
+    val sig = querySignature(queryVec, dim, nBits, seed)
+    (0L until (1L << nBits))
+      .filter(b => java.lang.Long.bitCount(b ^ sig) <= radius)
   }
 
   /** Per-dimension (min, max) over the corpus — the scalar-quantization

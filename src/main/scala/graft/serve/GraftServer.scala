@@ -620,21 +620,13 @@ final class GraftServer(
         ok(JObj("index_name" -> JStr(name), "deleted" -> JBool(false),
           "message" -> JStr(s"index '$name' does not exist")))
       else {
-        deleteRec(dir)
+        LocalCommitStore.deleteRecursive(dir)
         graft.Tables.invalidate(spark, dir.resolve("source").toString)
         spark.catalog.clearCache()
         ok(JObj("index_name" -> JStr(name), "deleted" -> JBool(true),
           "message" -> JStr(s"index '$name' deleted")))
       }
     }
-  }
-
-  private def deleteRec(p: Path): Unit = {
-    if (!Files.exists(p)) return
-    val walk = Files.walk(p)
-    try walk.sorted(java.util.Comparator.reverseOrder[Path]())
-      .forEach(Files.deleteIfExists(_))
-    finally walk.close()
   }
 
   // --------------------------------------------------------- row rendering

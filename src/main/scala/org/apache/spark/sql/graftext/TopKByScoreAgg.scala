@@ -3,13 +3,14 @@ package org.apache.spark.sql.graftext
 
 import java.nio.ByteBuffer
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpectsInputTypes}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.functions.{col, posexplode}
 import org.apache.spark.sql.types._
 
 /** Bounded top-k-by-score aggregate: keeps the `k` best (score, id)
@@ -176,4 +177,14 @@ object TopKByScoreAgg {
     ExpressionUtils.column(
       TopKByScoreAgg(ExpressionUtils.expression(score),
         ExpressionUtils.expression(id), k).toAggregateExpression())
+
+  /** The top `k` rows of `df` per `key` by (`score` DESC, doc_id ASC),
+    * one row each: (key, doc_id, `scoreAs`, rank), rank a 1-based long. */
+  def ranked(df: DataFrame, key: String, score: Column, k: Int,
+      scoreAs: String): DataFrame =
+    df.groupBy(key)
+      .agg(topKByScore(score, col("doc_id"), k).as("top"))
+      .select(col(key), posexplode(col("top")).as(Seq("rk", "t")))
+      .select(col(key), col("t.id").as("doc_id"), col("t.score").as(scoreAs),
+        (col("rk") + 1).cast("long").as("rank"))
 }
